@@ -137,8 +137,8 @@ def values_frame(spark, rows, schema: str, max_rows: int = 10_000):
     rows = rows if isinstance(rows, (list, tuple)) else list(rows)
     if len(rows) > max_rows:
         return spark.createDataFrame(rows, schema)
-    cols = _split_schema(schema)
     try:
+        cols = _split_schema(schema)
         tuples = ", ".join(
             "("
             + ", ".join(

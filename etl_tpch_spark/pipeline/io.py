@@ -25,9 +25,14 @@ Scale notes baked into the defaults:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
+
+_R = TypeVar("_R")
 
 FORMATS = ("parquet", "orc", "json", "csv", "xml", "text")
 
@@ -150,3 +155,29 @@ def table_files(path: str) -> list[str]:
             if not f.startswith(("_", "."))
         )
     return sorted(out)
+
+
+def run_concurrently(
+    spark: SparkSession, actions: list[Callable[[], _R]]
+) -> list[_R]:
+    """Run independent Spark actions on one thread each and return their
+    results in order.
+
+    On a small input each action is mostly fixed driver cost (planning,
+    job submission, commit), so overlapping them lets the scheduler
+    fill idle cores with the other actions' tasks.  Each action is
+    wrapped with ``inheritable_thread_target`` in the calling thread,
+    so job groups, local properties and session tags reach the
+    workers.  Every action runs to completion; the first failure (in
+    list order) re-raises, noting any others."""
+    if len(actions) <= 1:
+        return [a() for a in actions]
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(inherit(a)) for a in actions]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(f"a concurrent action also failed: {other!r}")
+        raise errors[0]
+    return [f.result() for f in futures]

@@ -15,9 +15,12 @@ checkpointed Structured Streaming file source (SURVEY.md §3.2, T3):
   15-min Prefect deployment (T1); a ``processingTime`` trigger turns the
   same code into an always-on stream.
 
-At scale: one stream per table; ``maxFilesPerTrigger`` bounds per-batch
-work so a backlog spike cannot OOM an executor; the sink append is
-partition-parallel like any batch write.
+At scale: one stream per table, and the per-table drains run
+concurrently (each query runs on its own stream-execution thread, so a
+tick waits for the slowest table, not the sum of all);
+``maxFilesPerTrigger`` bounds per-batch work so a backlog spike cannot
+OOM an executor; the sink append is partition-parallel like any batch
+write.
 """
 
 from __future__ import annotations
@@ -105,13 +108,29 @@ def stream_ingest_all(
     tables: tuple[str, ...] = ALL_TABLES,
 ) -> dict[str, StreamingQuery]:
     """One AvailableNow drain per staged table (flow ``json_to_parquet``,
-    preprocess.py:53-59, minus its locks and retries)."""
+    preprocess.py:53-59, minus its locks and retries).
+
+    Every drain is started first and then all are awaited, so the
+    tables ingest concurrently (the reference maps one task per staged
+    file, preprocess.py:57).  If any drain fails, every query still
+    active is stopped before the error re-raises: nothing keeps running
+    behind a failed tick, and a stopped drain's uncommitted batch is
+    replayed from its checkpoint by the next run, exactly once."""
     out: dict[str, StreamingQuery] = {}
-    for t in tables:
-        if list_staged_files(staging_dir, t):
-            out[t] = stream_ingest_table(
-                spark, staging_dir, processed_dir, checkpoint_dir, t
-            )
+    try:
+        for t in tables:
+            if list_staged_files(staging_dir, t):
+                out[t] = stream_ingest_table(
+                    spark, staging_dir, processed_dir, checkpoint_dir, t,
+                    await_termination=False,
+                )
+        for q in out.values():
+            q.awaitTermination()
+    except BaseException:
+        for q in out.values():
+            if q.isActive:
+                q.stop()
+        raise
     return out
 
 

@@ -14,6 +14,7 @@ from etl_tpch_spark.pipeline.io import (
     FORMATS,
     convert_table,
     read_table,
+    run_concurrently,
     table_files,
     write_table,
 )
@@ -94,3 +95,34 @@ def test_schemaless_row_format_rejected(spark, tmp_path):
 def test_formats_constant_is_exhaustive():
     # xml joined in round 10: a first-class built-in source in Spark 4
     assert set(FORMATS) == {"parquet", "orc", "json", "csv", "xml", "text"}
+
+
+def test_run_concurrently_order_properties_and_errors(spark):
+    """Results come back in action order, each worker thread sees the
+    caller's local properties, and a failure re-raises (noting any
+    other failure) only after every action ran."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("etl.test.owner", "caller")
+    try:
+        got = run_concurrently(spark, [
+            lambda n=n: (sc.getLocalProperty("etl.test.owner"),
+                         spark.range(n).count())
+            for n in range(4)
+        ])
+    finally:
+        sc.setLocalProperty("etl.test.owner", None)
+    assert got == [("caller", n) for n in range(4)]
+
+    ran = []
+
+    def fail(msg):
+        ran.append(msg)
+        raise ValueError(msg)
+
+    with pytest.raises(ValueError, match="first") as err:
+        run_concurrently(spark, [
+            lambda: fail("first"), lambda: ran.append("ok"),
+            lambda: fail("second"),
+        ])
+    assert sorted(ran) == ["first", "ok", "second"]
+    assert any("second" in note for note in err.value.__notes__)

@@ -111,48 +111,116 @@ def test_compact_preserves_rows(spark, zones, staged):
 
 def test_reduce_matches_pandas(spark, zones, staged):
     """Gold outputs match an independent pandas computation of the same
-    query over the processed tables (reference reduce.py:43-78)."""
+    query over the processed tables (reference reduce.py:43-78): for
+    every segment, one parquet file holding exactly the per-segment
+    reference rows in its row order, whether ``k`` cuts every segment
+    or exceeds them all."""
     cutoff = NOW  # orders stamped ≤ NOW, ship times ≥ NOW-15m..+3d
-    paths = query_reduce(
-        spark,
-        zones["processed"],
-        zones["results"],
-        cutoff=cutoff,
-        k=10,
-    )
-    assert set(paths) == {
-        "AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY",
-    }
+    for k, cuts in ((3, True), (100_000, False)):
+        paths = query_reduce(
+            spark,
+            zones["processed"],
+            os.path.join(zones["results"], f"k{k}"),
+            cutoff=cutoff,
+            k=k,
+        )
+        assert set(paths) == {
+            "AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY",
+        }
+        sizes = []
+        for seg, path in paths.items():
+            parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert len(parts) == 1, (seg, parts)
+            got = pd.read_parquet(path)
+            exp = _expected_top(zones["processed"], seg, cutoff, k)
+            sizes.append(len(exp))
+            pd.testing.assert_frame_equal(
+                got, exp, check_exact=False, rtol=1e-9
+            )
+        # k cuts every segment, or exceeds them all
+        assert (min(sizes) == k) if cuts else (max(sizes) < k)
 
-    proc = zones["processed"]
+
+def _expected_top(proc: str, seg: str, cutoff, k: int) -> pd.DataFrame:
+    """The per-segment reference computation (reduce.py:43-78) in
+    pandas: top-``k`` unshipped orders of ``seg`` by revenue desc,
+    order key asc, with the gold output's four columns."""
     po = pd.read_parquet(os.path.join(proc, "orders"))
     pl = pd.read_parquet(os.path.join(proc, "lineitem"))
     pc = pd.read_parquet(os.path.join(proc, "customer"))
+    cust = pc[pc.c_mktsegment == seg][["c_custkey"]]
+    orders = po[po.o_order_time < cutoff]
+    line = pl[pl.l_ship_time > cutoff]
+    jn = orders.merge(cust, left_on="o_custkey", right_on="c_custkey")
+    jn = jn.merge(line, left_on="o_orderkey", right_on="l_orderkey")
+    jn["revenue"] = jn.l_extendedprice * (1 - jn.l_discount)
+    return (
+        jn.groupby(["l_orderkey", "o_order_time", "o_orderpriority"])[
+            "revenue"
+        ]
+        .sum()
+        .reset_index()
+        .sort_values(["revenue", "l_orderkey"], ascending=[False, True])
+        .head(k)[["l_orderkey", "revenue", "o_order_time", "o_orderpriority"]]
+        .reset_index(drop=True)
+    )
 
-    for seg, path in paths.items():
-        got = pd.read_parquet(path)
-        cust = pc[pc.c_mktsegment == seg][["c_custkey"]]
-        orders = po[po.o_order_time < cutoff]
-        line = pl[pl.l_ship_time > cutoff]
-        jn = orders.merge(cust, left_on="o_custkey", right_on="c_custkey")
-        jn = jn.merge(line, left_on="o_orderkey", right_on="l_orderkey")
-        jn["revenue"] = jn.l_extendedprice * (1 - jn.l_discount)
-        exp = (
-            jn.groupby(["l_orderkey", "o_order_time", "o_orderpriority"])[
-                "revenue"
-            ]
-            .sum()
-            .reset_index()
-            .sort_values(["revenue", "l_orderkey"], ascending=[False, True])
-            .head(10)
-        )
-        assert len(got) == len(exp)
-        pd.testing.assert_frame_equal(
-            got[["l_orderkey", "revenue"]].reset_index(drop=True),
-            exp[["l_orderkey", "revenue"]].reset_index(drop=True),
-            check_exact=False,
-            rtol=1e-9,
-        )
+
+def test_reduce_segment_without_customers(spark, zones, staged, tmp_path):
+    """A segment with no customers still gets one empty parquet with the
+    four-column schema, so ``results_ready`` holds."""
+    from etl_tpch_spark.pipeline.workflow import results_ready
+
+    proc = str(tmp_path / "processed")
+    for t in ("orders", "lineitem", "customer"):
+        df = spark.read.parquet(os.path.join(zones["processed"], t))
+        if t == "customer":
+            df = df.filter(df.c_mktsegment != "MACHINERY")
+        df.write.parquet(os.path.join(proc, t))
+    results = str(tmp_path / "results")
+    paths = query_reduce(spark, proc, results, cutoff=NOW, k=5)
+    path = paths["MACHINERY"]
+    parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(parts) == 1
+    got = pd.read_parquet(path)
+    assert len(got) == 0
+    assert list(got.columns) == [
+        "l_orderkey", "revenue", "o_order_time", "o_orderpriority",
+    ]
+    assert all(
+        len(pd.read_parquet(p)) == 5 for s, p in paths.items()
+        if s != "MACHINERY"
+    )
+    assert results_ready(results)
+
+
+def test_reduce_breaks_revenue_ties_by_order_key(spark, tmp_path):
+    """Equal revenues rank by order key ascending, across the segment's
+    customers (the ``revenue desc, l_orderkey`` order of the
+    per-segment query)."""
+    proc = str(tmp_path / "processed")
+    before, after = NOW - timedelta(hours=1), NOW + timedelta(hours=1)
+    spark.createDataFrame(
+        [(1, "BUILDING"), (2, "BUILDING")],
+        "c_custkey LONG, c_mktsegment STRING",
+    ).write.parquet(os.path.join(proc, "customer"))
+    spark.createDataFrame(
+        [(k, c, before, "1-URGENT") for k, c in
+         (("b", 1), ("a", 2), ("c", 1), ("d", 2))],
+        "o_orderkey STRING, o_custkey LONG, o_order_time TIMESTAMP, "
+        "o_orderpriority STRING",
+    ).write.parquet(os.path.join(proc, "orders"))
+    spark.createDataFrame(
+        [(k, p, 0.0, after) for k, p in
+         (("b", 100.0), ("a", 100.0), ("c", 100.0), ("d", 200.0))],
+        "l_orderkey STRING, l_extendedprice DOUBLE, l_discount DOUBLE, "
+        "l_ship_time TIMESTAMP",
+    ).write.parquet(os.path.join(proc, "lineitem"))
+    paths = query_reduce(
+        spark, proc, str(tmp_path / "results"), cutoff=NOW, k=3
+    )
+    got = pd.read_parquet(paths["BUILDING"])
+    assert got.l_orderkey.tolist() == ["d", "a", "b"]
 
 
 def test_reduce_accepts_testdata_naming(spark):

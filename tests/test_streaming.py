@@ -11,14 +11,17 @@ from datetime import datetime
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from etl_tpch_spark.catalog import load_table
 from etl_tpch_spark.pipeline import incrementalize, list_staged_files
+from etl_tpch_spark.pipeline.ingest import ALL_TABLES
 from etl_tpch_spark.streaming import (
     running_user_stats,
     session_window_stats,
     sliding_window_avg,
+    stream_ingest_all,
     stream_ingest_table,
     streaming_events_source,
     tumbling_window_counts,
@@ -69,6 +72,44 @@ def test_stream_ingest_exactly_once(spark, tmp_path_factory):
     )
     stream_ingest_table(spark, staging, processed, ckpt, "orders")
     assert spark.read.parquet(out).count() == 2 * n_orders
+
+
+def test_stream_ingest_all_drain_failure(spark, tmp_path_factory):
+    """One table's drain fails while the others run: the call raises,
+    no query is left running, and a re-run once the fault is gone
+    leaves every staged row in the processed zone exactly once."""
+    root = tmp_path_factory.mktemp("drain_failure")
+    staging, processed, ckpt = (
+        str(root / z) for z in ("staging", "processed", "ckpt")
+    )
+    incrementalize(spark, TEST_SF_DIR, staging, now=NOW, key_fn="hash")
+    stream_ingest_all(spark, staging, processed, ckpt)
+    incrementalize(
+        spark, TEST_SF_DIR, staging, now=datetime(2026, 2, 1, 9, 15),
+        key_fn="hash",
+    )
+    # orders is awaited before lineitem, whose drain is still running
+    # when the orders drain fails on its unreadable offset log
+    offset = os.path.join(ckpt, "orders", "offsets", "0")
+    with open(offset) as f:
+        good = f.read()
+    with open(offset, "w") as f:
+        f.write("v1\n{not an offset\n")
+    with pytest.raises(StreamingQueryException):
+        stream_ingest_all(spark, staging, processed, ckpt)
+    assert spark.streams.active == []
+
+    with open(offset, "w") as f:
+        f.write(good)
+    assert set(stream_ingest_all(spark, staging, processed, ckpt)) == set(
+        ALL_TABLES
+    )
+    for t in ALL_TABLES:
+        staged = spark.read.json(list_staged_files(staging, t)).count()
+        stored = spark.read.parquet(os.path.join(processed, t))
+        assert stored.count() == staged, t
+    orders = spark.read.parquet(os.path.join(processed, "orders"))
+    assert orders.select("o_orderkey").distinct().count() == orders.count()
 
 
 @pytest.mark.parametrize(
