@@ -281,11 +281,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     # first-rep walls (VERDICT r11 #4): the best-of-N headline reports
     # warm steady state; rep 1 additionally carries every within-
-    # process amortization (_QTERM_CACHE/_PROBE_CACHE routing memos,
-    # persisted-frame builds), so emitting it beside the best makes
-    # the warm-protocol amortization a MEASUREMENT instead of a
-    # docstring claim, and bounds any future session cache's cold
-    # cost.  Additions-only: the headline metric is unchanged.
+    # process amortization (the session memo, etl_tpch_spark/memo.py:
+    # query routing rows, persisted-frame builds), so emitting it
+    # beside the best makes the warm-protocol amortization a
+    # MEASUREMENT instead of a docstring claim, and bounds any memo
+    # entry's cold cost.  Additions-only: the headline metric is
+    # unchanged.
     first_reps: dict[str, float] = {}
     for idx, name in enumerate(names):
         fn = all_queries[name].fn
@@ -421,7 +422,7 @@ def main() -> None:
                     for name in emitted_queries
                 },
                 # rep-1 walls (see first_reps above): best-of-N minus
-                # this column = what the session caches amortize
+                # this column = what the session memo amortizes
                 "queries_first_rep": {
                     name: first_reps.get(name)
                     for name in emitted_queries

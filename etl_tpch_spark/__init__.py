@@ -6,6 +6,7 @@ pipeline (coiled/etl-tpch; see SURVEY.md) as an idiomatic Spark engine:
 - ``session``     — tuned SparkSession bootstrap (AQE, Arrow, UTC).
 - ``schemas``     — explicit StructTypes for every table (FIXTURES.md).
 - ``catalog``     — parquet-directory table loading + temp-view registry.
+- ``memo``        — the session memo every reused derivation goes through.
 - ``queries``     — the analytical query surface (flagship Q3-variant,
                     adapted TPC-H set, windowed/event queries) built on
                     the central ``registry``.

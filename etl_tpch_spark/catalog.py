@@ -20,6 +20,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .memo import memo
 from .schemas import TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,38 +30,33 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def table_stamp(sf_dir: str, name: str) -> str:
-    """Session-cache key for ``sf_dir``'s ``name`` table: realpath +
-    (mtime_ns, size) of the parquet, so a regenerated fixture at the
-    same path can never hit a stale cached derivation — the ONE
-    definition of the staleness recipe every per-session cache keys on
-    (k-means fits, edge lists, reference LM, query-term rows,
-    scratch_index_dir / _reused_index markers)."""
-    real = os.path.realpath(sf_dir)
+def table_version(sf_dir: str, name: str) -> tuple[str, str]:
+    """(identity, stamp) of ``sf_dir``'s ``name`` table for the session
+    memo: the parquet's realpath and its ``mtime_ns-size``, so a
+    regenerated fixture at the same path can never hit a stale
+    derivation.  The stamp is empty when the table is missing."""
+    path = table_path(os.path.realpath(sf_dir), name)
     try:
-        st = os.stat(table_path(real, name))
-        return f"{real}|{st.st_mtime_ns}-{st.st_size}"
+        st = os.stat(path)
     except OSError:
-        return real
+        return path, ""
+    return path, f"{st.st_mtime_ns}-{st.st_size}"
 
 
-def evict_superseded(cache: dict, match) -> None:
-    """Drop (and unpersist) every cache entry whose key satisfies
-    ``match`` — called by the session caches right before inserting a
-    fresh entry for the same identity (same fixture path / index, new
-    stamp or version), so a regenerated fixture or a ticked index
-    releases the replaced persisted DataFrames instead of pinning one
-    generation of executor storage per rebuild for the application
-    lifetime.  Values may be DataFrames or tuples holding one in ANY
-    position (ADVICE r11: _PROBE_CACHE stores (rows, frame) — the old
-    first-element convention silently unpersisted the rows list)."""
-    for k in [k for k in cache if match(k)]:
-        v = cache.pop(k)
-        for item in v if isinstance(v, tuple) else (v,):
-            try:
-                item.unpersist()
-            except Exception:
-                pass  # plain values (lists, dicts) have nothing to release
+def table_stamp(sf_dir: str, name: str) -> str:
+    """One-string form of :func:`table_version` for the on-disk stamped
+    stores and caller cache keys: ``realpath(sf_dir)|mtime_ns-size``
+    (k-means fits, edge lists, scratch_index_dir / _reused_index
+    markers).  :func:`split_stamp` inverts it."""
+    path, stamp = table_version(sf_dir, name)
+    real = os.path.dirname(path)
+    return f"{real}|{stamp}" if stamp else real
+
+
+def split_stamp(cache_key: str) -> tuple[str, str]:
+    """A :func:`table_stamp` string → (identity, stamp) for the memo."""
+    identity, _, stamp = cache_key.partition("|")
+    return identity, stamp
 
 
 # Scan-spread helper (round 11, guide §2.5 "input skew: one huge
@@ -102,17 +98,9 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-# (application id, table name, stamp) → footer-inferred schema.  One
-# bench/oracle process opens the same fixture tables hundreds of times;
-# each open re-read the footer on the driver.  The stamp (realpath +
-# mtime+size) is the standard staleness recipe, so a regenerated
-# fixture re-infers; superseded stamps are evicted on insert.
-_TABLE_SCHEMA_CACHE: dict[tuple[str, str, str], object] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one table. Schema comes from parquet footers (exact,
-    session-cached per fixture stamp); explicit schemas in `schemas.py`
+    memoized per fixture stamp); explicit schemas in `schemas.py`
     are for JSON/streaming sources where inference would scan data.
 
     events.ts is written as parquet TIMESTAMP(NANOS), which Spark's
@@ -122,24 +110,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     double division: ns epochs exceed 2^53)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        name,
-        table_stamp(sf_dir, name),
+    # one bench/oracle process opens the same fixture tables hundreds
+    # of times; the footer is inferred once per fixture stamp
+    identity, stamp = table_version(sf_dir, name)
+    schema = memo(
+        spark,
+        "catalog.schema",
+        identity,
+        stamp,
+        lambda: spark.read.parquet(path).schema,
     )
-    cached = _TABLE_SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        evict_superseded(
-            _TABLE_SCHEMA_CACHE,
-            lambda k: k[0] == key[0]
-            and k[1] == key[1]
-            and k[2].split("|", 1)[0] == key[2].split("|", 1)[0]
-            and k[2] != key[2],
-        )
-        _TABLE_SCHEMA_CACHE[key] = df.schema
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

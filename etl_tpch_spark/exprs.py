@@ -95,23 +95,39 @@ def _split_schema(schema: str) -> list[tuple[str, str]]:
     return out
 
 
+_INTEGRAL = (
+    "tinyint", "byte", "smallint", "short", "int", "integer", "bigint", "long"
+)
+
+
 def _values_cell(v, typ: str) -> str:
+    """SQL text of one cell of declared type ``typ``.  A value whose
+    Python type does not match (a float in an integral column, a
+    non-str in a string column, a bool in a numeric one) or a type it
+    cannot render raises ``TypeError``, so values_frame falls back to
+    ``createDataFrame`` — which accepts or rejects it by its own rules
+    — instead of silently coercing it."""
     t = typ.lower()
     if v is None:
         return f"CAST(NULL AS {typ})"
     if t.startswith("array"):
+        if not isinstance(v, (list, tuple)):
+            raise TypeError(f"{v!r} is not an array")
         elem = typ[typ.index("<") + 1 : typ.rindex(">")]
         return (
             f"array({', '.join(_values_cell(e, elem) for e in v)})"
         )
-    if t in ("string", "varchar"):
-        return sql_str(str(v))
-    if t in ("double", "float", "real"):
-        return sql_double(v)
-    if t in ("boolean", "bool"):
+    if t in ("boolean", "bool") and isinstance(v, bool):
         return "true" if v else "false"
-    # integral types: render exactly
-    return str(int(v))
+    if isinstance(v, bool):
+        raise TypeError(f"{v!r} in a {typ} column")
+    if t in ("string", "varchar") and isinstance(v, str):
+        return sql_str(v)
+    if t in ("double", "float", "real") and isinstance(v, float):
+        return sql_double(v)
+    if t in _INTEGRAL and isinstance(v, int):
+        return str(v)
+    raise TypeError(f"{v!r} in a {typ} column")
 
 
 def values_frame(spark, rows, schema: str, max_rows: int = 10_000):

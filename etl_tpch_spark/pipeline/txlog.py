@@ -69,6 +69,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import memo
+
 _LOG_DIR = "_txlog"
 _MAX_COMMIT_RETRIES = 20
 
@@ -80,12 +82,6 @@ class _MergeConflict(Exception):
 
 # predicate spec for read_where: (col, op, value) conjunctions
 _PRED_OPS = ("=", "<", "<=", ">", ">=")
-
-# (application id, table realpath, version, merged) → resolved snapshot
-# schema.  A committed version's file set — hence its schema — is
-# immutable, so the entry can never go stale; superseded versions of
-# the same table are evicted on insert (TxTable.read).
-_SCHEMA_CACHE: dict[tuple[str, str, int, bool], object] = {}
 
 
 def _enc(v):
@@ -1066,9 +1062,11 @@ class TxTable:
 
         ``dedup_keys`` (round 12, guide §6 — write the layout the
         reads want): additionally collapse duplicate key rows during
-        the rewrite (``max`` of every non-key column — the SAME
+        the rewrite (``max`` of the ONE non-key column — the SAME
         merge the read-side dedup aggregates apply, e.g.
-        SearchIndex.probe's ``max(tf)``), and mark the commit entry
+        SearchIndex.probe's ``max(tf)``; a table with more non-key
+        columns is refused with ``ValueError``, since per-column maxima
+        can assemble a row that never existed), and mark the commit entry
         ``canonical: [keys]`` so readers can SKIP their per-query
         dedup exchange while the snapshot head stays this compact.
         Duplicates only exist after the one replay mode exactly-once
@@ -1102,6 +1100,12 @@ class TxTable:
         df = self.read(spark, version=start_v)
         if dedup_keys:
             others = [c for c in df.columns if c not in dedup_keys]
+            if len(others) > 1:
+                raise ValueError(
+                    f"dedup_keys={dedup_keys!r} leaves {len(others)} "
+                    f"non-key columns {others!r}; a per-column max "
+                    "needs exactly one"
+                )
             df = df.groupBy(*dedup_keys).agg(
                 *[F.max(c).alias(c) for c in others]
             )
@@ -1288,9 +1292,9 @@ class TxTable:
         holding schema-evolved files (append(merge_schema=True))
         unions file schemas; uniform snapshots skip the footer merge.
 
-        The resolved schema is session-cached per (application, table
-        path, version): a committed version's file set is immutable,
-        so its schema is too — Delta keeps the schema in the log for
+        The resolved schema is memoized (memo.py) per table path and
+        version: a committed version's file set is immutable, so its
+        schema is too — Delta keeps the schema in the log for
         exactly this reason.  Repeated snapshot reads (every indexed
         query re-opens its index tables) then skip the footer-
         inference job instead of re-launching it per read."""
@@ -1312,26 +1316,14 @@ class TxTable:
         if merged:
             reader = reader.option("mergeSchema", "true")
         paths = [os.path.join(self.path, f) for f in files]
-        key = (
-            spark.sparkContext.applicationId,
+        schema = memo(
+            spark,
+            "txlog.schema",
             os.path.realpath(self.path),
             v,
-            merged,
+            lambda: reader.parquet(*paths).schema,
         )
-        cached = _SCHEMA_CACHE.get(key)
-        if cached is not None:
-            return reader.schema(cached).parquet(*paths)
-        df = reader.parquet(*paths)
-        # one schema per (app, path): versions of a table supersede
-        # each other, so drop older versions' entries on insert
-        for k in [
-            k
-            for k in _SCHEMA_CACHE
-            if k[0] == key[0] and k[1] == key[1] and k[2] != v
-        ]:
-            del _SCHEMA_CACHE[k]
-        _SCHEMA_CACHE[key] = df.schema
-        return df
+        return reader.schema(schema).parquet(*paths)
 
     def diff(
         self,

@@ -32,7 +32,6 @@ the identical edge set from the unrolled-Lloyd CTE.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,23 +49,14 @@ _EDGES_SQL = f"""
 """
 
 
-# (application id, embeddings stamp, threshold) → persisted edge list.
-# The kernel is deterministic (integer Lloyd + fold-ordered cosines),
-# so a cached edge set is bit-identical to a fresh run; the edge list
-# is near-dup pairs — orders of magnitude smaller than the corpus — so
-# pinning it is centroid-cache-sized, not corpus-sized.
-_EDGE_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-_EDGE_LOCK = threading.Lock()
-
-
 def _edge_store(stamp: str, threshold: float) -> tuple[str, bool]:
     """(generation dir, complete) for the stored edge list — the
     shared stamped-artifact recipe (catalog.artifact_store, same as
     the kmeans fits): new stamp ⇒ new directory, live readers of the
     previous generation keep their files."""
-    from ..catalog import artifact_store
+    from ..catalog import artifact_store, split_stamp
 
-    real = stamp.split("|", 1)[0]
+    real = split_stamp(stamp)[0]
     return artifact_store("sim-edges", f"{real}|{threshold}", stamp)
 
 
@@ -81,52 +71,38 @@ def _edges_at(
     PREVIOUS session built is bit-identical to a fresh run — a cold
     session reads the near-dup-pair-sized artifact instead of repaying
     the Lloyd passes + per-cell cosine kernel (VERDICT r6 #2; marker
-    holds the embeddings stamp, so a regenerated fixture rebuilds)."""
+    holds the embeddings stamp, so a regenerated fixture rebuilds).
+    The persisted frame is memoized (memo.py) per embeddings stamp and
+    threshold: near-dup pairs, orders of magnitude below the corpus."""
+    from ..catalog import split_stamp
+    from ..memo import memo
     from .similarity import _emb_stamp
 
     stamp = _emb_stamp(sf_dir)
-    key = (spark.sparkContext.applicationId, stamp, threshold)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # serialize the miss path against concurrent planners (threaded
-    # plan audit): two threads must not race one artifact dir
-    with _EDGE_LOCK:
-        return _edges_miss(spark, sf_dir, stamp, key, threshold)
-
-
-def _edges_miss(
-    spark: SparkSession,
-    sf_dir: str,
-    stamp: str,
-    key: tuple,
-    threshold: float,
-) -> DataFrame:
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from ..catalog import evict_superseded
-
-    real = stamp.split("|", 1)[0]
-    evict_superseded(
-        _EDGE_CACHE,
-        lambda k: k[0] == key[0]
-        and k[2] == threshold
-        and k[1].split("|", 1)[0] == real
-        and k[1] != stamp,
+    identity, version = split_stamp(stamp)
+    return memo(
+        spark,
+        "graph.edges",
+        identity,
+        version,
+        lambda: _build_edges(spark, sf_dir, stamp, threshold),
+        params=(threshold,),
     )
+
+
+def _build_edges(
+    spark: SparkSession, sf_dir: str, stamp: str, threshold: float
+) -> DataFrame:
     from ..pipeline.txlog import TxTable
 
     root, complete = _edge_store(stamp, threshold)
     if complete:
-        built = (
+        return (
             TxTable(os.path.join(root, "edges"))
             .read(spark)
             .select("vec_a", "vec_b")
             .persist()
         )
-        _EDGE_CACHE[key] = built
-        return built
     t = Tables(spark, sf_dir)
     built = (
         cosine_pairs_threshold_cells(
@@ -148,7 +124,6 @@ def _edges_miss(
         mark_store_complete(root, stamp)
     except Exception:
         pass
-    _EDGE_CACHE[key] = built
     return built
 
 

@@ -197,32 +197,29 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- index-served lexical
 
 
-# (application id, documents stamp) → collected (query_id, term) rows
-# of the 5 fixed query docs.  The tokenization is deterministic per
-# fixture and |Q|-sized (a few hundred rows), so caching it removes
-# one documents-table read job per hybrid invocation — query-side
-# analysis amortized exactly like a serving tier would.
-_QTERM_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _query_term_rows(spark: SparkSession, sf_dir: str) -> list:
-    from ..catalog import table_stamp
+    """Collected (query_id, term) rows of the 5 fixed query docs,
+    memoized per documents stamp (memo.py).  The tokenization is
+    deterministic per fixture and |Q|-sized (a few hundred rows), so
+    reusing it removes one documents-table read job per hybrid
+    invocation — query-side analysis amortized exactly like a serving
+    tier would."""
+    from ..catalog import table_version
+    from ..memo import memo
 
-    key = (spark.sparkContext.applicationId, table_stamp(sf_dir, "documents"))
-    hit = _QTERM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..catalog import evict_superseded
-
-    real = key[1].split("|", 1)[0]
-    evict_superseded(
-        _QTERM_CACHE,
-        lambda k: k[0] == key[0]
-        and k[1].split("|", 1)[0] == real
-        and k[1] != key[1],
+    identity, stamp = table_version(sf_dir, "documents")
+    return memo(
+        spark,
+        "search.qterms",
+        identity,
+        stamp,
+        lambda: _collect_query_terms(spark, sf_dir),
     )
+
+
+def _collect_query_terms(spark: SparkSession, sf_dir: str) -> list:
     t = Tables(spark, sf_dir)
-    rows = (
+    return (
         t.documents.filter(F.col("doc_id").isin(QUERY_IDS))
         .select(
             F.col("doc_id").alias("query_id"),
@@ -234,8 +231,6 @@ def _query_term_rows(spark: SparkSession, sf_dir: str) -> list:
         )
         .collect()
     )
-    _QTERM_CACHE[key] = rows
-    return rows
 
 
 def _search_index_for(spark: SparkSession, sf_dir: str):
@@ -455,7 +450,7 @@ def search_hybrid_rrf_indexed(
     t = Tables(spark, sf_dir)
 
     # tokenize the 5 query docs (pushed IsIn filter → row-group
-    # pruned read, session-cached — _query_term_rows) and ship the few
+    # pruned read, memoized — _query_term_rows) and ship the few
     # hundred (query_id, term) rows as a literal frame — the query
     # side never re-enters the plan
     q_rows = _query_term_rows(spark, sf_dir)

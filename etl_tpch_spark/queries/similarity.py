@@ -34,7 +34,7 @@ PAIR_THRESHOLD = 0.4
 
 
 def _emb_stamp(sf_dir: str) -> str:
-    """Session-cache key for in-query k-means fits over ``sf_dir``'s
+    """Memo/cache key for in-query k-means fits over ``sf_dir``'s
     embeddings (catalog.table_stamp — realpath + mtime/size, so a
     regenerated fixture can never hit a stale fit)."""
     from ..catalog import table_stamp

@@ -28,12 +28,11 @@ total is a scalar broadcast.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Tables
+from ..catalog import Tables, table_version
+from ..memo import memo
 from ..registry import query
 
 _PARTSUPP_SQL = """
@@ -46,32 +45,18 @@ _PARTSUPP_SQL = """
 """
 
 
-# (application id, part table_stamp) → persisted derived partsupp;
-# entries live for the session, like the LSH signature cache; a
-# regenerated fixture changes the stamp and evicts the stale build
-_PS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def derived_partsupp(t: Tables) -> DataFrame:
-    from ..catalog import evict_superseded, table_stamp
-
-    key = (
-        t._spark.sparkContext.applicationId,
-        table_stamp(t._sf_dir, "part"),
+    """The persisted derived relation, memoized per part-table stamp
+    (memo.py): a regenerated fixture changes the stamp, and the memo
+    unpersists the superseded build."""
+    identity, stamp = table_version(t._sf_dir, "part")
+    return memo(
+        t._spark,
+        "tpch.partsupp",
+        identity,
+        stamp,
+        lambda: _build_partsupp(t).persist(),
     )
-    cached = _PS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    real = key[1].split("|", 1)[0]
-    evict_superseded(
-        _PS_CACHE,
-        lambda k: k[0] == key[0]
-        and k[1].split("|", 1)[0] == real
-        and k[1] != key[1],
-    )
-    built = _build_partsupp(t).persist()
-    _PS_CACHE[key] = built
-    return built
 
 
 def _build_partsupp(t: Tables) -> DataFrame:

@@ -1,6 +1,6 @@
 """Stored-artifact lifecycle for the trained session caches (VERDICT
 r6 #2): the k-means fit and the similarity-graph edge list are promoted
-from applicationId-keyed session caches to disk TxTables, so a FRESH
+from the session memo (etl_tpch_spark/memo.py) to disk TxTables, so a FRESH
 session opens the artifact instead of repaying training.  Determinism
 (integer Lloyd, fold-ordered cosines) makes the stored artifacts
 bit-identical to a fresh run; the marker holds the corpus stamp, so a
@@ -15,6 +15,7 @@ import shutil
 import numpy as np
 import pytest
 
+from etl_tpch_spark import memo
 from etl_tpch_spark.similarity import kmeans as km
 
 
@@ -38,7 +39,7 @@ def test_fit_cold_session_loads_artifact_without_training(
     emb = _vectors(spark)
     ck = "/persist/fit|stamp-1"
     _wipe(ck, 4, 1)
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     final, cents = km.kmeans_fit(emb, 4, 1, cache_key=ck)
     warm = sorted(map(tuple, final.collect()))
     assert os.path.exists(
@@ -46,7 +47,7 @@ def test_fit_cold_session_loads_artifact_without_training(
     )
 
     # fresh session: memory cache empty; training must NOT run
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
 
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("cold session retrained instead of loading")
@@ -56,17 +57,20 @@ def test_fit_cold_session_loads_artifact_without_training(
     final2, cents2 = km.kmeans_fit(emb, 4, 1, cache_key=ck)
     assert cents2 == cents
     assert sorted(map(tuple, final2.collect())) == warm
-    # and it landed back in the session cache for plan reuse
-    assert any(k[1] == ck for k in km._FIT_CACHE)
+    # and it landed back in the session memo for plan reuse
+    assert any(
+        e[:3] == ("kmeans.fit", *ck.split("|", 1))
+        for e in memo.stats()["entries"]
+    )
 
 
 def test_fit_stale_stamp_retrains_and_replaces(spark):
     emb = _vectors(spark, seed=5)
     old, new = "/persist/fit2|stamp-old", "/persist/fit2|stamp-new"
     _wipe(old, 4, 1)
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     km.kmeans_fit(emb, 4, 1, cache_key=old)
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     # same path, new stamp: marker mismatch → retrain → marker updated
     km.kmeans_fit(emb, 4, 1, cache_key=new)
     marker = os.path.join(km._fit_store(new, 4, 1)[0], "_BUILD_COMPLETE")
@@ -80,7 +84,7 @@ def test_fit_artifact_distinct_per_k_and_iters(spark):
     ck = "/persist/fit3|stamp-1"
     for k, it in ((2, 1), (4, 1), (4, 2)):
         _wipe(ck, k, it)
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     km.kmeans_fit(emb, 2, 1, cache_key=ck)
     km.kmeans_fit(emb, 4, 2, cache_key=ck)
     d21 = km._fit_store(ck, 2, 1)[0]
@@ -97,11 +101,11 @@ def test_edges_cold_session_reads_stored_table(spark, sf_dir, monkeypatch):
     stamp = _emb_stamp(sf_dir)
     root = g._edge_store(stamp, PAIR_THRESHOLD)[0]
     shutil.rmtree(root, ignore_errors=True)
-    g._EDGE_CACHE.clear()
+    memo.clear("graph.edges")
     warm = sorted(map(tuple, g._edges(spark, sf_dir).collect()))
     assert os.path.exists(os.path.join(root, "_BUILD_COMPLETE"))
 
-    g._EDGE_CACHE.clear()
+    memo.clear("graph.edges")
 
     def boom(*a, **kw):  # pragma: no cover - failure path
         raise AssertionError("cold session recomputed the edge kernel")
@@ -116,13 +120,13 @@ def test_edges_stale_stamp_rebuilds(spark, sf_dir, monkeypatch):
     from etl_tpch_spark.queries.similarity import PAIR_THRESHOLD, _emb_stamp
 
     real_stamp = _emb_stamp(sf_dir)
-    g._EDGE_CACHE.clear()
+    memo.clear("graph.edges")
     g._edges(spark, sf_dir)  # artifact exists at real_stamp
 
     # simulate a regenerated fixture: same path, different stamp.
     # wipe the fake stamp's GENERATION first — a previous test session
     # already built it (generational dirs persist by design)
-    g._EDGE_CACHE.clear()
+    memo.clear("graph.edges")
     fake_stamp = real_stamp + "-regen"
     shutil.rmtree(
         g._edge_store(fake_stamp, PAIR_THRESHOLD)[0], ignore_errors=True
@@ -165,10 +169,10 @@ def test_new_stamp_gets_new_generation_dir(spark):
     old, new = "/persist/gen|stamp-a", "/persist/gen|stamp-b"
     _wipe(old, 4, 1)
     _wipe(new, 4, 1)
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     final_old, _ = km.kmeans_fit(emb, 4, 1, cache_key=old)
     d_old = km._fit_store(old, 4, 1)[0]
-    km._FIT_CACHE.clear()
+    memo.clear("kmeans.fit")
     km.kmeans_fit(emb, 4, 1, cache_key=new)
     d_new = km._fit_store(new, 4, 1)[0]
     assert d_old != d_new

@@ -266,3 +266,45 @@ def test_maxscore_pruned_on_fixture_corpus(spark, sf_dir, tmp_path):
     ]
     want = [tuple(r) for r in text_bm25_topk(spark, sf_dir).collect()]
     assert got == want
+
+
+def test_probe_pins_one_version_against_rival_optimize(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A rival optimize() landing right after probe() read the postings
+    head must not pair the pinned snapshot's duplicate-holding files
+    with the rival's canonical mark: the file list, the mark and the
+    read all come from the one version probe() pinned, so BM25 top-k
+    still equals the deduplicated reference."""
+    docs = load_table(spark, sf_dir, "documents")
+    clean = SearchIndex(str(tmp_path / "clean"))
+    clean.ingest(docs, batch_id="once")
+    want = [
+        tuple(r)
+        for r in clean.search(spark, _BM25_TERMS, _BM25_TOPK).collect()
+    ]
+    path = str(tmp_path / "dup")
+    dup = SearchIndex(path)
+    dup.ingest(docs, batch_id="bundling-a")
+    dup.ingest(docs, batch_id="bundling-b")  # same docs, new id
+    rival = SearchIndex(path)
+    head = dup.postings.latest_version
+    pinned: list[int] = []
+
+    def head_then_rival_optimize():
+        v = head()
+        if not pinned:
+            pinned.append(v)
+            rival.optimize(spark)  # lands after the pin
+        return v
+
+    monkeypatch.setattr(
+        dup.postings, "latest_version", head_then_rival_optimize
+    )
+    got = [
+        tuple(r)
+        for r in dup.search(spark, _BM25_TERMS, _BM25_TOPK).collect()
+    ]
+    assert pinned and head() > pinned[0]
+    assert rival.postings.commit_entry(head()).get("canonical")
+    assert got == want

@@ -431,3 +431,138 @@ def test_snapshot_rows_from_manifest_alone(spark, orders, tmp_path):
     t.append(orders.filter(F.col("o_orderkey") % 2 == 1))
     assert t.snapshot_rows() == orders.count()
     assert t.snapshot_rows(version=1) == n1
+
+
+# ------------------------------------------- canonical (dedup_keys) mark
+
+_KEYS = ("term", "doc_id")
+
+
+def _postings(spark, rows):
+    return spark.createDataFrame(rows, "term STRING, doc_id LONG, tf LONG")
+
+
+def _mark(t: TxTable, v: int | None = None):
+    return t.commit_entry(t.latest_version() if v is None else v).get(
+        "canonical"
+    )
+
+
+def _dup_table(spark, path) -> TxTable:
+    """Two batches holding the same (term, doc_id) rows — the
+    re-bundled replay mode a dedup compact exists for."""
+    t = TxTable(str(path))
+    rows = [("a", 1, 2), ("b", 1, 1), ("a", 2, 5)]
+    t.append(_postings(spark, rows))
+    t.append(_postings(spark, rows))
+    return t
+
+
+def test_canonical_mark_only_from_clean_dedup_rewrite(spark, tmp_path):
+    t = _dup_table(spark, tmp_path / "t")
+    assert _mark(t) is None
+    # a plain rewrite keeps the duplicates and earns no mark
+    t.compact(spark, 1)
+    assert _mark(t) is None
+    assert t.read(spark).count() == 6
+    # a dedup rewrite with no rival lands the mark over deduped rows
+    v = t.compact(spark, 1, dedup_keys=_KEYS)
+    assert _mark(t, v) == list(_KEYS)
+    assert sorted(map(tuple, t.read(spark).collect())) == [
+        ("a", 1, 2), ("a", 2, 5), ("b", 1, 1),
+    ]
+    # a rival append carried into the rewrite's manifest voids it
+    t.append(_postings(spark, [("a", 1, 2)]))
+    rival = TxTable(t.path)
+    orig = t._try_commit_at
+    raced = {"done": False}
+
+    def racing(v, entry):
+        if not raced["done"]:
+            raced["done"] = True
+            rival.append(_postings(spark, [("c", 3, 1)]))
+            return False
+        return orig(v, entry)
+
+    t._try_commit_at = racing
+    v = t.compact(spark, 1, dedup_keys=_KEYS)
+    assert t.commit_entry(v)["op"] == "compact"
+    assert _mark(t, v) is None
+    assert ("c", 3, 1) in map(tuple, t.read(spark).collect())
+
+
+@pytest.mark.parametrize("op", ["append", "overwrite"])
+def test_later_write_voids_canonical_mark(spark, tmp_path, op):
+    t = _dup_table(spark, tmp_path / "t")
+    v = t.compact(spark, 1, dedup_keys=_KEYS)
+    getattr(t, op)(_postings(spark, [("a", 1, 2)]))
+    # the head is no longer the canonical compact; the old version
+    # keeps its mark for time travel
+    assert _mark(t) is None
+    assert _mark(t, v) == list(_KEYS)
+    # and the next dedup compact rewrites instead of short-circuiting
+    head = t.latest_version()
+    v2 = t.compact(spark, 1, dedup_keys=_KEYS)
+    assert v2 == head + 1 and _mark(t, v2) == list(_KEYS)
+
+
+def test_restore_of_canonical_version_drops_mark(spark, tmp_path):
+    """restore() carries files, stats and the schema flag, not the
+    canonical mark: readers of the restored head take the dedup path
+    (value-identical on those files), and the next dedup compact
+    re-earns the mark with a rewrite."""
+    t = _dup_table(spark, tmp_path / "t")
+    v = t.compact(spark, 1, dedup_keys=_KEYS)
+    t.append(_postings(spark, [("a", 1, 2)]))
+    r = t.restore(v)
+    entry = t.commit_entry(r)
+    assert entry["op"] == "restore"
+    assert entry["files"] == t.commit_entry(v)["files"]
+    assert "canonical" not in entry
+    v2 = t.compact(spark, 1, dedup_keys=_KEYS)
+    assert v2 == r + 1 and _mark(t, v2) == list(_KEYS)
+
+
+def test_canonical_skip_returns_the_dedup_rows(spark, tmp_path, monkeypatch):
+    """SearchIndex.probe() and _dl() over a canonical snapshot skip
+    their max-dedup aggregate; the rows must equal the aggregate's."""
+    from etl_tpch_spark.pipeline import search_index as si
+
+    docs = spark.createDataFrame(
+        [(i, f"the w{i % 3} body w{i % 5}") for i in range(20)],
+        "doc_id LONG, text STRING",
+    )
+    idx = si.SearchIndex(str(tmp_path / "inv"))
+    idx.ingest(docs, batch_id="bundling-a")
+    idx.ingest(docs, batch_id="bundling-b")  # same docs, new id
+    idx.optimize(spark)
+    assert _mark(idx.postings) == ["term", "doc_id"]
+    assert _mark(idx.doclens) == ["doc_id"]
+    terms = ["the", "w1", "w4", "absent"]
+
+    def rows():
+        return (
+            sorted(map(tuple, idx.probe(spark, terms).collect())),
+            sorted(map(tuple, idx._dl(spark).collect())),
+        )
+
+    skipped = rows()
+    monkeypatch.setattr(si, "_canonical", lambda t, v, keys: False)
+    deduped = rows()
+    assert skipped == deduped
+    assert len(skipped[1]) == 20
+
+
+def test_compact_dedup_refuses_several_value_columns(spark, tmp_path):
+    """A per-column max over two value columns can assemble a row that
+    never existed, so the dedup rewrite refuses before writing."""
+    t = TxTable(str(tmp_path / "t"))
+    t.append(
+        spark.createDataFrame(
+            [(1, 1, 9), (1, 9, 1)], "k LONG, a LONG, b LONG"
+        )
+    )
+    v = t.latest_version()
+    with pytest.raises(ValueError, match="non-key columns"):
+        t.compact(spark, 1, dedup_keys=("k",))
+    assert t.latest_version() == v
