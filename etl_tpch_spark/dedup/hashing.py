@@ -1,8 +1,9 @@
-"""Shared deterministic hashing constants + builders for the dedup and
-similarity operators.  Spark expression and DuckDB SQL twins live side
-by side; both derive randomness from md5 (cross-engine identical) and
-fixed integer constants (generated by LCG below, embedded as literals in
-the SQL so the oracle needs no Python).
+"""Shared deterministic hashing constants + kernels for the dedup and
+similarity operators.  Each kernel is one Spark-SQL text builder
+(``spark_sql_*``, for ``selectExpr``/``F.expr``) next to its
+hand-written DuckDB twin (``sql_*``); both derive randomness from md5
+(cross-engine identical) and fixed integer constants (generated by LCG
+below, embedded as literals in the SQL so the oracle needs no Python).
 
 Arithmetic safety: token hashes are 32-bit; minhash multipliers < 2^20,
 so a*h+b < 2^52 — exact in BIGINT and double on both engines.
@@ -13,11 +14,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..exprs import json_array_lit
-from ..functions.text import HASH_MOD, sql_token_hash, token_hash
+from ..functions.text import HASH_MOD, spark_sql_token_hash, sql_token_hash
 
 # ------------------------------------------------------------ constants
 
@@ -44,36 +43,22 @@ HYPERPLANES: list[list[int]] = [
 # ------------------------------------------------------------ minhash
 
 
-def _perm_hash(a: int, b: int):
-    # closure factory: PySpark reads the lambda's arity, so default-arg
-    # capture (lambda s, a=a, b=b) would look like a 3-arg lambda
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(HASH_MOD)
-
-
-def shingle_hashes(shingles: Column) -> Column:
+def spark_sql_shingle_hashes(shingles_expr: str) -> str:
     """array<long> of 32-bit token hashes — compute ONCE per document,
-    then feed every minhash permutation: the md5 inside token_hash is
-    the expensive part, and factoring it out of the 16 perms is a 16×
-    reduction in hash work (value-identical: the perms are affine maps
-    of the same hash)."""
-    return F.transform(shingles, token_hash)
+    then feed every minhash permutation: the md5 inside the token hash
+    is the expensive part, and factoring it out of the 16 perms is a
+    16× reduction in hash work (value-identical: the perms are affine
+    maps of the same hash)."""
+    return f"transform({shingles_expr}, t -> {spark_sql_token_hash('t')})"
 
 
 def sql_shingle_hashes(shingles_expr: str) -> str:
     return f"list_transform({shingles_expr}, t -> {sql_token_hash('t')})"
 
 
-def spark_sql_shingle_hashes(shingles_expr: str) -> str:
-    """Spark-SQL text twin of :func:`shingle_hashes` (round 11: one
-    parser round-trip instead of per-node py4j construction)."""
-    from ..functions.text import spark_sql_token_hash
-
-    return f"transform({shingles_expr}, t -> {spark_sql_token_hash('t')})"
-
-
-def minhash_signature(hashes: Column) -> Column:
+def spark_sql_minhash_signature(hashes_expr: str) -> str:
     """array<long> of N_MINHASH minhashes over a pre-hashed shingle
-    array (see shingle_hashes).
+    array (see spark_sql_shingle_hashes).
 
     Evaluated as ONE pass over the shingle array: each shingle expands
     to its 16 permuted values, folded with an elementwise min.  The
@@ -84,17 +69,14 @@ def minhash_signature(hashes: Column) -> Column:
     permutation.  min is evaluation-order independent, so both forms
     are value-identical and the DuckDB oracle keeps its per-perm
     list_min shape."""
-    per_shingle = F.transform(
-        hashes,
-        lambda h: F.array(*[_perm_hash(a, b)(h) for a, b in MINHASH_PERMS]),
+    perms = ", ".join(
+        f"({a} * h + {b}) % {HASH_MOD}" for a, b in MINHASH_PERMS
     )
-    init = F.array(
-        *[F.lit(HASH_MOD).cast("long") for _ in range(N_MINHASH)]
-    )
-    return F.aggregate(
-        per_shingle,
-        init,
-        lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b)),
+    init = ", ".join(f"{HASH_MOD}L" for _ in range(N_MINHASH))
+    return (
+        f"aggregate(transform({hashes_expr}, h -> array({perms})), "
+        f"array({init}), "
+        "(acc, x) -> zip_with(acc, x, (a, b) -> least(a, b)))"
     )
 
 
@@ -107,35 +89,9 @@ def sql_minhash_signature(hashes_expr: str) -> str:
     return "[" + ", ".join(parts) + "]"
 
 
-def spark_sql_minhash_signature(hashes_expr: str) -> str:
-    """Spark-SQL text twin of :func:`minhash_signature` — the same
-    one-pass elementwise-min fold, through the parser (round 11)."""
-    perms = ", ".join(
-        f"({a} * h + {b}) % {HASH_MOD}" for a, b in MINHASH_PERMS
-    )
-    init = ", ".join(f"{HASH_MOD}L" for _ in range(N_MINHASH))
-    return (
-        f"aggregate(transform({hashes_expr}, h -> array({perms})), "
-        f"array({init}), "
-        "(acc, x) -> zip_with(acc, x, (a, b) -> least(a, b)))"
-    )
-
-
-def band_keys(sig: Column) -> Column:
+def spark_sql_band_keys(sig_expr: str) -> str:
     """array<string> of N_BANDS band-bucket keys (band id prefixed so
     buckets never collide across bands)."""
-    keys = []
-    for band in range(N_BANDS):
-        cols = [F.lit(str(band))] + [
-            F.element_at(sig, band * ROWS_PER_BAND + r + 1).cast("string")
-            for r in range(ROWS_PER_BAND)
-        ]
-        keys.append(F.concat_ws(",", *cols))
-    return F.array(*keys)
-
-
-def spark_sql_band_keys(sig_expr: str) -> str:
-    """Spark-SQL text twin of :func:`band_keys` (round 11)."""
     keys = []
     for band in range(N_BANDS):
         parts = [f"'{band}'"] + [
@@ -161,53 +117,23 @@ def sql_band_keys(sig_expr: str) -> str:
 # ------------------------------------------------------- hyperplane LSH
 
 
-def _as_double_array(emb: Column) -> Column:
-    return F.transform(emb, lambda x: x.cast("double"))
-
-
 def spark_sql_as_double_array(emb: str) -> str:
-    """Spark-SQL text twin of :func:`_as_double_array` (round 11)."""
+    """The embedding array cast element-wise to double."""
     return f"transform({emb}, x -> cast(x AS double))"
 
 
-def dot_fold(a: Column, b: Column) -> Column:
+def spark_sql_dot_fold(a: str, b: str) -> str:
     """Sequential left-fold dot product of two double arrays —
     bit-identical to DuckDB's list_reduce over the same values."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def spark_sql_dot_fold(a: str, b: str) -> str:
-    """Spark-SQL text twin of :func:`dot_fold` — same sequential fold
-    through the parser in one round-trip (round 11)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         "(acc, x) -> acc + x)"
     )
 
 
-def hyperplane_signature(demb: Column) -> Column:
-    """int bucket id: sign bits of N_HYPERPLANES integer hyperplane
-    projections.  Takes an ALREADY double-cast array (callers hoist the
-    cast — inlining it here would re-evaluate the cast transform once
-    per hyperplane, 16×; see minhash_signature for the same CSE
-    pitfall).  The hyperplane arrays are literal → constant-folded."""
-    sig = F.lit(0).cast("long")
-    for i, w in enumerate(HYPERPLANES):
-        # single ArrayType Literal per plane (not CreateArray with 64
-        # children): 16 planes x 64 literal nodes bloated every
-        # referencing plan's analysis time (round 11)
-        warr = json_array_lit([float(x) for x in w], "double")
-        bit = F.when(dot_fold(demb, warr) > 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
-        )
-        sig = sig + bit
-    return sig
-
-
+# DuckDB oracle of the int bucket id: sign bits of N_HYPERPLANES
+# integer hyperplane projections, each a sequential dot-product fold
+# (the Spark side is hyperplane_signature_udf below).
 def sql_hyperplane_signature(emb_expr: str) -> str:
     terms = []
     for i, w in enumerate(HYPERPLANES):
@@ -222,16 +148,8 @@ def sql_hyperplane_signature(emb_expr: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def cosine_fold(a: Column, b: Column) -> Column:
-    """Exact-fold cosine of two float-array columns (cast to double):
-    dot / sqrt(na * nb), every reduction a sequential left-fold."""
-    da, db = _as_double_array(a), _as_double_array(b)
-    dot = dot_fold(da, db)
-    na = dot_fold(da, da)
-    nb = dot_fold(db, db)
-    return dot / F.sqrt(na * nb)
-
-
+# DuckDB exact-fold cosine of two float-array columns (cast to
+# double): dot / sqrt(na * nb), every reduction a sequential left-fold.
 def sql_cosine_fold(a_expr: str, b_expr: str) -> str:
     def fold_dot(x: str, y: str) -> str:
         return (
@@ -248,13 +166,13 @@ def sql_cosine_fold(a_expr: str, b_expr: str) -> str:
 
 
 def hyperplane_signature_udf():
-    """Arrow-batched twin of :func:`hyperplane_signature` for the hot
-    path (corpus-wide signatures): numpy accumulates dimension-by-
-    dimension in the SAME order as the sequential fold — acc starts at
-    0.0 and adds x_j·w_ij in ascending j, so every IEEE addition is
-    identical and the signature is bit-equal to the expression form and
-    the DuckDB oracle.  ~40× less per-row overhead than 16 interpreted
-    higher-order-function folds (measured on sf0.1 embeddings).
+    """Spark form of the hyperplane signature (Arrow-batched): numpy
+    accumulates dimension-by-dimension in the SAME order as the
+    sequential fold — acc starts at 0.0 and adds x_j·w_ij in ascending
+    j, so every IEEE addition is identical and the signature is
+    bit-equal to the DuckDB oracle :func:`sql_hyperplane_signature`.
+    ~40× less per-row overhead than 16 interpreted higher-order-function
+    folds (measured on sf0.1 embeddings).
     """
     # (EMB_DIM, N_HYPERPLANES): row j holds every hyperplane's weight j
     WT = np.array(HYPERPLANES, dtype="float64").T

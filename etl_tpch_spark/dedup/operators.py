@@ -32,16 +32,20 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..exprs import sql_double, sql_ident
-from ..functions.text import token_hash, token_hash_wide, tokens
-from .hashing import band_keys, minhash_signature, shingle_hashes
+from ..functions.text import spark_sql_token_hash_wide, spark_sql_tokens
+from .hashing import (
+    spark_sql_band_keys,
+    spark_sql_minhash_signature,
+    spark_sql_shingle_hashes,
+)
 
 NGRAM = 3
 
 _DEFAULT_SIG_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
-def word_shingles_from_tokens(toks: F.Column, n: int = NGRAM) -> F.Column:
-    """Distinct word n-gram shingle array from a TOKEN ARRAY column
+def spark_sql_word_shingles_from_tokens(toks: str, n: int = NGRAM) -> str:
+    """Distinct word n-gram shingle array from a TOKEN ARRAY expression
     (empty if < n tokens).
 
     Built from n shifted ``slice``s of the token array folded with
@@ -52,31 +56,14 @@ def word_shingles_from_tokens(toks: F.Column, n: int = NGRAM) -> F.Column:
     higher-order functions) — measured ~5× slower on sf0.1 documents.
     Output strings are identical.
 
-    Prefer passing a column REFERENCE to a previously projected token
-    array over an inline ``tokens(text)`` expression: this builder
+    Pass a column REFERENCE to a previously projected token array, not
+    an inline ``spark_sql_tokens(text)`` expression: this builder
     references ``toks`` n+2 times, and an inline argument re-runs the
     split+filter tokenizer at each reference (measured 21% of the
     sf0.1 shingle kernel); a reference to an already-projected column
     is free, and Catalyst's CollapseProject keeps the separate
     projection because the alias is non-cheap and multiply-referenced
     (:func:`shingle_sets` is the canonical shape)."""
-    n_grams = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    grams = F.slice(toks, 1, n_grams)
-    for k in range(1, n):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, 1 + k, n_grams),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def spark_sql_word_shingles_from_tokens(toks: str, n: int = NGRAM) -> str:
-    """Spark-SQL text twin of :func:`word_shingles_from_tokens` — the
-    same shifted-slice zip_with fold through the parser in one py4j
-    round-trip (round 11, guide §4)."""
     ng = f"greatest(size({toks}) - {n - 1}, 0)"
     grams = f"slice({toks}, 1, {ng})"
     for k in range(1, n):
@@ -88,14 +75,6 @@ def spark_sql_word_shingles_from_tokens(toks: str, n: int = NGRAM) -> str:
         f"CASE WHEN size({toks}) >= {n} THEN array_distinct({grams}) "
         "ELSE cast(array() AS array<string>) END"
     )
-
-
-def word_shingles(text: F.Column, n: int = NGRAM) -> F.Column:
-    """Distinct word n-gram shingle array of a TEXT column — the
-    single-expression form (tokenizer inlined; see
-    :func:`word_shingles_from_tokens` for the cheaper two-projection
-    shape when the caller controls the plan)."""
-    return word_shingles_from_tokens(tokens(text), n)
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
@@ -111,17 +90,15 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_sets(docs: DataFrame) -> DataFrame:
+def shingle_sets(docs: DataFrame, n: int = NGRAM) -> DataFrame:
     """(doc_id, shingles) via an explicit token projection: the
     tokenizer runs once per row instead of once per shingle-builder
-    reference (n+2 ×) — see word_shingles_from_tokens."""
-    from ..functions.text import spark_sql_tokens
-
+    reference (n+2 ×) — see spark_sql_word_shingles_from_tokens."""
     return docs.selectExpr(
         "doc_id", f"{spark_sql_tokens('text')} AS _toks"
     ).selectExpr(
         "doc_id",
-        f"{spark_sql_word_shingles_from_tokens('_toks')} AS shingles",
+        f"{spark_sql_word_shingles_from_tokens('_toks', n)} AS shingles",
     )
 
 
@@ -206,9 +183,9 @@ def _banded_signatures(
         row-at-a-time Filter (a full extra shingle pass on the
         narrowest stage); the equivalent pre-shingle form
         ``size(tokens) >= NGRAM`` (< n tokens ⇔ empty shingle array,
-        by construction of word_shingles_from_tokens) inlines only the
-        tokenizer;
-    (b) ``band_keys(minhash_signature(...))`` re-embedded the entire
+        by construction of spark_sql_word_shingles_from_tokens) inlines
+        only the tokenizer;
+    (b) the band keys over the minhash signature re-embedded the entire
         16-permutation minhash fold into EACH of the 16 element_at
         extractions — 16× the minhash work per row.
     Materializing tokens → shingles → signature in separate Projects
@@ -222,12 +199,6 @@ def _banded_signatures(
     §2.5, one cheap text exchange; a no-op whenever the input already
     has ≥ cores partitions, i.e. at any real scale)."""
     from ..catalog import spread_scan
-    from ..functions.text import spark_sql_tokens
-    from .hashing import (
-        spark_sql_band_keys,
-        spark_sql_minhash_signature,
-        spark_sql_shingle_hashes,
-    )
 
     tk = (
         spread_scan(docs)
@@ -448,7 +419,6 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     corpus scale; 60 bits with hamming 3 gives 4×15-bit bands = 32k
     buckets — the Manku/Google near-dup configuration."""
     from ..catalog import spread_scan
-    from ..functions.text import spark_sql_token_hash_wide, spark_sql_tokens
 
     ex = spread_scan(docs).selectExpr(
         "doc_id", f"explode({spark_sql_tokens('text')}) AS tok"
@@ -476,33 +446,16 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     )
 
 
-def simhash_band_cols(sig: F.Column, max_hamming: int, bits: int = SIMHASH_BITS):
-    """Split a ``bits``-wide signature into ``max_hamming + 1``
-    contiguous bands.  Pigeonhole: a pair within Hamming distance
-    ``max_hamming`` differs in ≤ max_hamming bits, so at least one of
-    the max_hamming+1 bands is bit-identical — an equi-join on
-    (band index, band value) finds every qualifying pair with zero
-    false negatives.  Returns a list of band-value columns."""
-    n_bands = max_hamming + 1
-    base, extra = divmod(bits, n_bands)
-    cols, offset = [], 0
-    for i in range(n_bands):
-        width = base + (1 if i < extra else 0)
-        mask = (1 << width) - 1
-        cols.append(
-            F.shiftright(sig, offset).bitwiseAND(F.lit(mask)).alias(f"band{i}")
-        )
-        offset += width
-    return cols
-
-
 def simhash_band_explode_sql(
     sig_expr: str, max_hamming: int, bits: int = SIMHASH_BITS
 ) -> str:
-    """Parser twin of :func:`simhash_band_cols` wrapped in the
-    (band_idx, band_val) tag structs and exploded — ONE expression
-    string instead of ~10 builder round-trips per band (round 11,
-    guide §4).  Same band widths/offsets/values as the Column form."""
+    """Split a ``bits``-wide signature into ``max_hamming + 1``
+    contiguous bands, each tagged as a (band_idx, band_val) struct, and
+    explode them.  Pigeonhole: a pair within Hamming distance
+    ``max_hamming`` differs in ≤ max_hamming bits, so at least one of
+    the max_hamming+1 bands is bit-identical — an equi-join on
+    (band index, band value) finds every qualifying pair with zero
+    false negatives."""
     n_bands = max_hamming + 1
     base, extra = divmod(bits, n_bands)
     parts, offset = [], 0

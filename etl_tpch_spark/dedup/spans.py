@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import spark_sql_tokens
 from ..pipeline.txlog import TxTable
 
 SPAN_W = 8  # minimum duplicated run, in tokens (Lee et al. use 50 BPE
@@ -72,7 +72,6 @@ def window_hashes(docs: DataFrame) -> DataFrame:
     # input already hash-partitioned by doc_id pays one redundant
     # compact-row exchange.  Acceptable: every caller scans parquet
     # (never pre-partitioned), and the exchange it saves is 5× larger.
-    from ..functions.text import spark_sql_tokens
 
     def rot(x: str, a: str) -> str:
         return f"(shiftleft({x}, {a}) | shiftrightunsigned({x}, 64 - ({a})))"

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import tokens
+from .text import spark_sql_tokens
 
 MICRO = 1_000_000
 
@@ -41,7 +41,7 @@ def bigram_pairs(docs: DataFrame) -> DataFrame:
         F.slice("W", 1, n).alias("w1"), F.slice("W", 2, n).alias("w2")
     )
     return (
-        docs.withColumn("W", tokens(F.col("text")))
+        docs.withColumn("W", F.expr(spark_sql_tokens("text")))
         .withColumn("p", F.explode(z))
         .drop("W")
     )

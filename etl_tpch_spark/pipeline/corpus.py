@@ -10,7 +10,7 @@ Stage graph per tick (every stage idempotent on ``batch_id``):
    deterministic, order-independent across ticks because ids are
    global).  O(new) per tick.
 2. **quality gate** — drop docs under the quality floor
-   (functions/text.py quality_score); row-local, no shuffle.
+   (functions/text.py spark_sql_quality_score); row-local, no shuffle.
 3. **split assignment** — leakage-safe 80/10/10 train/validation/test
    by id-hash bucket (the sample_hash_split rule); membership is a
    pure row function, so appended batches never move old docs.
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..dedup.index import MinHashIndex
 from ..functions.splits import hash_split
-from ..functions.text import quality_score
+from ..functions.text import spark_sql_quality_score
 from .export import export_shards
 from .txlog import TxTable
 
@@ -145,7 +145,7 @@ def corpus_cycle(
     # verify lineage re-executes once per consumer
     scored = (
         new_docs.join(victims, "doc_id", "left_anti")
-        .withColumn("quality", quality_score(F.col("text")))
+        .withColumn("quality", F.expr(spark_sql_quality_score("text")))
         .persist()
     )
     try:

@@ -56,7 +56,7 @@ class HllIndex:
             F.date_trunc("day", F.col("ts")).alias("day"),
             F.col("user_id").cast("string").alias("k"),
         )
-        scored = _hll_spark(rows, F.col("k"), _M_DAILY, _RANK_MAX_DAILY)
+        scored = _hll_spark(rows, _M_DAILY, _RANK_MAX_DAILY)
         return scored.groupBy("day", "reg").agg(
             F.max("rho").alias("m_rho")
         )

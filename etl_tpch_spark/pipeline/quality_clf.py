@@ -64,7 +64,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import sql_token_hash, tokens
+from ..functions.text import spark_sql_tokens, sql_token_hash
 from .txlog import TxTable
 
 CLF_BUCKETS = 1024  # hashed feature buckets; bucket id CLF_BUCKETS = bias
@@ -121,7 +121,7 @@ def doc_features(
     Bucket order inside the array is deterministic (first occurrence)
     and irrelevant to every consumer — integer sums commute exactly."""
     return docs.select(
-        "doc_id", tokens(F.col("text")).alias("W")
+        "doc_id", F.expr(f"{spark_sql_tokens('text')} AS W")
     ).select("doc_id", F.expr(buckets_expr(n_buckets)).alias("buckets"))
 
 
@@ -213,7 +213,7 @@ def training_frame(
     is_pos = F.col("source") == ref_source
     return (
         docs.select(
-            "doc_id", tokens(F.col("text")).alias("W"), "source"
+            "doc_id", F.expr(f"{spark_sql_tokens('text')} AS W"), "source"
         )
         .select(
             "doc_id",

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import bm25_topk
-from ..functions.text import tokens
+from ..functions.text import spark_sql_tokens
 from ..memo import memo
 from .txlog import TxTable
 
@@ -107,9 +107,8 @@ class SearchIndex:
         # coalesce to '' so an empty crawl doc contributes dl=0 and no
         # postings instead of corrupting avgdl (the same external-input
         # hazard the LM's bigram_pairs clamps)
-        toks = docs.select(
-            "doc_id",
-            tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
+        toks = docs.selectExpr(
+            "doc_id", spark_sql_tokens("coalesce(text, '')") + " AS toks"
         )
         dl = toks.select(
             "doc_id", F.size("toks").cast("long").alias("dl")

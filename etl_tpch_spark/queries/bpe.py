@@ -36,9 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import Tables
-from ..functions.text import tokens
+from ..functions.text import spark_sql_tokens
 from ..registry import query
 from .text import _SQL_TOKS
+
+_WORDS = f"explode({spark_sql_tokens('text')}) AS word"
 
 _BPE_K = 6  # merge rounds (fixture vocabulary saturates quickly; real
 # tokenizers run 30k-100k rounds of the same per-round plan)
@@ -143,7 +145,7 @@ def _word_vocab(t: Tables) -> DataFrame:
     """(word, freq, T=chars) — the ONLY corpus-sized stage (one explode
     + one count shuffle); everything after runs on the vocabulary."""
     wf = (
-        t.documents.select(F.explode(tokens(F.col("text"))).alias("word"))
+        t.documents.selectExpr(_WORDS)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -293,7 +295,7 @@ def train_bpe(
             < F.lit(sample_pct)
         )
     wf = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+        docs.selectExpr(_WORDS)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .collect()
@@ -360,7 +362,7 @@ def _trained_vocab(
 
 def _build_vocab(spark: SparkSession, t: Tables) -> tuple[DataFrame, int]:
     wf = (
-        t.documents.select(F.explode(tokens(F.col("text"))).alias("word"))
+        t.documents.selectExpr(_WORDS)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .collect()
@@ -451,9 +453,7 @@ def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     v, n_vocab = _trained_vocab(spark, t)
     seg = v.select("word", F.size("T").cast("long").alias("n_sub"))
-    tok = t.documents.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("word")
-    )
+    tok = t.documents.selectExpr("doc_id", _WORDS)
     return tok.join(_vocab_join_side(seg, n_vocab), "word").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("ws_tokens"),
         F.sum("n_sub").alias("bpe_tokens"),
@@ -596,7 +596,7 @@ def text_bpe_encode_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
     )
     nw = (
-        held.select(F.explode(tokens(F.col("text"))).alias("word"))
+        held.selectExpr(_WORDS)
         .distinct()
         .select("word", chars.alias("T"))
     )
@@ -604,13 +604,11 @@ def text_bpe_encode_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word", F.size("T").cast("long").alias("n_sub")
     )
     trained = (
-        train_docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+        train_docs.selectExpr(_WORDS)
         .distinct()
         .withColumn("seen", F.lit(1))
     )
-    tok = held.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("word")
-    )
+    tok = held.selectExpr("doc_id", _WORDS)
     return (
         tok.join(seg, "word")
         .join(trained, "word", "left")

@@ -20,18 +20,20 @@ from pyspark.sql import functions as F
 
 from ..catalog import Tables
 from ..dedup.clusters import connected_components
-from ..dedup.operators import shingle_sets, word_shingles
+from ..dedup.operators import shingle_sets
 from ..functions.splits import SQL_DOC_HASH, doc_hash, hash_split
 from ..functions.text import (
-    fingerprint,
-    quality_score,
+    spark_sql_fingerprint,
+    spark_sql_quality_score,
+    spark_sql_tokens,
     sql_fingerprint,
-    tokens,
 )
 from ..registry import REGISTRY, query
 from ..similarity.ann import cosine_pairs_threshold
 
 _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
+_WS_TOKENS = f"cast(size({spark_sql_tokens('text')}) AS bigint) AS ws_tokens"
+_QUALITY = f"{spark_sql_quality_score('text')} AS quality"
 
 # split/sample hashing is the SHARED definition in functions/splits.py —
 # the corpus tick and the report card must stay bit-identical to the
@@ -65,7 +67,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t.documents.select(
             hash_split().alias("split"),
-            F.size(tokens(F.col("text"))).cast("long").alias("ws_tokens"),
+            F.expr(_WS_TOKENS),
         )
         .groupBy("split")
         .agg(
@@ -229,9 +231,8 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all; output is ~n_tokens/32 rows per doc.  Each chunk
     carries the rolling fingerprint so chunk-level dedup composes."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
     base = (
-        t.documents.select("doc_id", toks.alias("W"))
+        t.documents.selectExpr("doc_id", f"{spark_sql_tokens('text')} AS W")
         .filter(F.size("W") > 0)
         .withColumn(
             "chunk_id",
@@ -245,14 +246,12 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    chunk = F.slice(
-        F.col("W"), F.col("chunk_id") * CHUNK_TOKENS + 1, CHUNK_TOKENS
-    )
-    return base.select(
+    chunk = f"slice(W, chunk_id * {CHUNK_TOKENS} + 1, {CHUNK_TOKENS})"
+    return base.selectExpr(
         "doc_id",
-        F.col("chunk_id").cast("int").alias("chunk_id"),
-        F.size(chunk).cast("long").alias("n_chunk_tokens"),
-        fingerprint(chunk).alias("chunk_fp"),
+        "cast(chunk_id AS int) AS chunk_id",
+        f"cast(size({chunk}) AS bigint) AS n_chunk_tokens",
+        f"{spark_sql_fingerprint(chunk)} AS chunk_fp",
     )
 
 
@@ -284,14 +283,13 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the shard key (at 100 TB, shard = partition file, so
     packing parallelizes per shard)."""
     t = Tables(spark, sf_dir)
-    ntok = F.size(tokens(F.col("text"))).cast("long")
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     base = t.documents.select(
-        "doc_id", "lang", ntok.alias("ws_tokens")
+        "doc_id", "lang", F.expr(_WS_TOKENS)
     ).withColumn("cum", F.sum("ws_tokens").over(w))
     return (
         base.filter(F.col("ws_tokens") > 0)
@@ -519,9 +517,6 @@ def dedup_embedding_clusters_bruteforce(
     return comp.select(F.col("doc_id").alias("vec_id"), "cluster_id")
 
 
-__all__ = ["word_shingles"]
-
-
 @query(
     "sample_quality_weighted",
     oracle=f"""
@@ -566,12 +561,7 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source retention audit; quality mass sums in DECIMAL(8,6) so
     the total is order-independent (functions/agg.py discipline)."""
     t = Tables(spark, sf_dir)
-    scored = t.documents.select(
-        "doc_id",
-        "source",
-        F.size(tokens(F.col("text"))).cast("long").alias("ws_tokens"),
-        quality_score(F.col("text")).alias("quality"),
-    )
+    scored = t.documents.selectExpr("doc_id", "source", _WS_TOKENS, _QUALITY)
     kept = _doc_hash() < F.col("quality") * F.lit(4294967296.0)
     return (
         scored.groupBy("source")
@@ -631,8 +621,8 @@ def corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = t.documents.select(
         hash_split().alias("split"),
         "lang",
-        F.size(tokens(F.col("text"))).cast("long").alias("ws_tokens"),
-        quality_score(F.col("text")).alias("quality"),
+        F.expr(_WS_TOKENS),
+        F.expr(_QUALITY),
     )
     return (
         scored.groupBy("split")

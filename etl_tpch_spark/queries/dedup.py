@@ -27,10 +27,10 @@ from ..dedup.operators import (
 )
 from ..functions.text import (
     HASH_MOD,
-    fingerprint,
+    spark_sql_fingerprint,
+    spark_sql_tokens,
     sql_fingerprint,
     sql_token_hash_wide,
-    tokens,
 )
 from ..registry import REGISTRY, query
 
@@ -81,8 +81,9 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape as exact dedup but whitespace/token-normalized."""
     t = Tables(spark, sf_dir)
     return (
-        t.documents.select(
-            fingerprint(tokens(F.col("text"))).alias("fp"), "doc_id"
+        t.documents.selectExpr(
+            f"{spark_sql_fingerprint(spark_sql_tokens('text'))} AS fp",
+            "doc_id",
         )
         .groupBy("fp")
         .agg(

@@ -126,7 +126,7 @@ def _scored(t: Tables, w: list[int]) -> DataFrame:
     """Score every document with the weight vector — one projection
     chain off one corpus scan (features, label, fold, gate all ride
     the same select; no self-join, no shuffle anywhere in the plan)."""
-    from ..functions.text import tokens
+    from ..functions.text import spark_sql_tokens
     from ..pipeline.quality_clf import (
         _BUCKETS_EXPR,
         _hard_sigmoid_expr,
@@ -141,7 +141,7 @@ def _scored(t: Tables, w: list[int]) -> DataFrame:
             .otherwise(F.lit(0))
             .cast("long")
             .alias("label"),
-            tokens(F.col("text")).alias("W"),
+            F.expr(f"{spark_sql_tokens('text')} AS W"),
         )
         .withColumn("buckets", F.expr(_BUCKETS_EXPR))
         .withColumn("score_q", _z_fold(w))
@@ -239,7 +239,7 @@ def text_quality_classifier_join(
     scale axis".  Same oracle as the fold form: integer sums commute,
     so the two plans are output-identical (also pinned at every
     measured B by tools/bench_clf_buckets.py's fingerprint assert)."""
-    from ..functions.text import tokens
+    from ..functions.text import spark_sql_tokens
     from ..pipeline.quality_clf import (
         _BUCKETS_EXPR,
         score_with_weights_join,
@@ -257,7 +257,7 @@ def text_quality_classifier_join(
             .otherwise(F.lit(0))
             .cast("long")
             .alias("label"),
-            tokens(F.col("text")).alias("W"),
+            F.expr(f"{spark_sql_tokens('text')} AS W"),
         )
         .withColumn("buckets", F.expr(_BUCKETS_EXPR))
     )

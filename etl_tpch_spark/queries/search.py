@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Tables
 from ..dedup.hashing import sql_cosine_fold
-from ..functions.text import tokens
+from ..functions.text import spark_sql_tokens
 from ..registry import REGISTRY, query
 from ..similarity.ann import cosine_topk_bruteforce
 from .similarity import _IDS, QUERY_IDS, _ivf_index_for
@@ -135,7 +135,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     toks = t.documents.select(
         "doc_id",
-        F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
+        F.expr(f"explode(array_distinct({spark_sql_tokens('text')})) AS term"),
     )
     dfreq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     q = toks.filter(F.col("doc_id").isin(QUERY_IDS)).select(
@@ -219,15 +219,12 @@ def _query_term_rows(spark: SparkSession, sf_dir: str) -> list:
 
 def _collect_query_terms(spark: SparkSession, sf_dir: str) -> list:
     t = Tables(spark, sf_dir)
+    toks = spark_sql_tokens("coalesce(text, '')")
     return (
         t.documents.filter(F.col("doc_id").isin(QUERY_IDS))
         .select(
             F.col("doc_id").alias("query_id"),
-            F.explode(
-                F.array_distinct(
-                    tokens(F.coalesce(F.col("text"), F.lit("")))
-                )
-            ).alias("term"),
+            F.expr(f"explode(array_distinct({toks})) AS term"),
         )
         .collect()
     )

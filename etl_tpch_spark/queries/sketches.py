@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..catalog import Tables
 from ..exprs import json_array_lit
 from ..functions.agg import money
-from ..functions.text import sql_token_hash, token_hash
+from ..functions.text import spark_sql_token_hash, sql_token_hash
 from ..operators.bloom import bloom_semi_join, bloom_semi_join_unbounded
 from ..registry import REGISTRY, query
 
@@ -91,11 +91,10 @@ def _corrected_est_spark(raw, hit, m: int):
     )
 
 
-def _hll_spark(rows: DataFrame, key_str, m: int, rank_max: int):
+def _hll_spark(rows: DataFrame, m: int, rank_max: int):
     """(group_cols…, reg, rho) → per-register maxima aggregate input.
-    ``rows`` must already carry ``key_str`` as a string column ``k``."""
-    h = token_hash(key_str).alias("h")
-    with_h = rows.select("*", h)
+    ``rows`` must already carry the key as a string column ``k``."""
+    with_h = rows.selectExpr("*", f"{spark_sql_token_hash('k')} AS h")
     reg = (F.col("h") % m).alias("reg")
     w = F.shiftright("h", {256: 8, 64: 6}[m]).alias("w")
     with_w = with_h.select("*", reg, w)
@@ -169,7 +168,7 @@ def agg_hll_distinct_customers(
     rows = t.orders.select(
         F.col("o_custkey").cast("string").alias("k")
     )
-    scored = _hll_spark(rows, F.col("k"), _M_GLOBAL, _RANK_MAX_GLOBAL)
+    scored = _hll_spark(rows, _M_GLOBAL, _RANK_MAX_GLOBAL)
     regs = scored.groupBy("reg").agg(F.max("rho").alias("m_rho"))
     agg = regs.agg(
         F.count(F.lit(1)).alias("hit"),
@@ -267,7 +266,7 @@ def events_hll_daily_users(
         F.date_trunc("day", F.col("ts")).alias("day"),
         F.col("user_id").cast("string").alias("k"),
     )
-    scored = _hll_spark(rows, F.col("k"), _M_DAILY, _RANK_MAX_DAILY)
+    scored = _hll_spark(rows, _M_DAILY, _RANK_MAX_DAILY)
     regs = scored.groupBy("day", "reg").agg(F.max("rho").alias("m_rho"))
     agg = regs.groupBy("day").agg(
         F.count(F.lit(1)).alias("hit"),
@@ -479,7 +478,7 @@ def events_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.col("ts")).alias("day"),
         F.col("user_id").cast("string").alias("k"),
     )
-    scored = _hll_spark(rows, F.col("k"), _M_DAILY, _RANK_MAX_DAILY)
+    scored = _hll_spark(rows, _M_DAILY, _RANK_MAX_DAILY)
     regs = scored.groupBy("day", "reg").agg(F.max("rho").alias("m_rho"))
 
     def _est(frame: DataFrame, key: str, out: str) -> DataFrame:

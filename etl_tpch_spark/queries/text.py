@@ -1,6 +1,7 @@
 """Text-analysis queries over ``documents`` (north-star LLM-data ops).
 
-Each is a deterministic column-expression pipeline (functions/text.py)
+Each is a deterministic pipeline over the Spark-SQL text kernels of
+functions/text.py
 with a DuckDB oracle — including the hash-based fingerprint, thanks to
 the cross-engine md5 hash recipe.
 """
@@ -15,14 +16,17 @@ from ..functions.bm25 import bm25_topk
 from ..functions.text import (
     CJK_PATTERN,
     STOPWORDS,
-    fingerprint,
+    spark_sql_fingerprint,
+    spark_sql_quality_score,
+    spark_sql_stopword_count,
+    spark_sql_token_hash,
+    spark_sql_tokens,
     sql_fingerprint,
-    stopword_count,
-    tokens,
 )
 from ..registry import query
 
 _SQL_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
+_TOKS = spark_sql_tokens("text")
 
 
 @query(
@@ -45,7 +49,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio (vocabulary diversity), whitespace ratio.  Pure column
     expressions — scans once, no shuffle."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
+    toks = F.expr(_TOKS)
     n_words = F.size(toks).cast("long")
     n_uniq = F.size(F.array_distinct(toks)).cast("long")
     return t.documents.select(
@@ -96,8 +100,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment swaps in fastText/CLD3 via a pandas UDF — this keeps the
     operator shape JVM-side and oracle-checkable.)"""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    c = {lang: stopword_count(toks, ws) for lang, ws in STOPWORDS.items()}
+    c = {
+        lang: F.expr(spark_sql_stopword_count(_TOKS, ws))
+        for lang, ws in STOPWORDS.items()
+    }
     pred = (
         F.when(F.col("text").rlike(CJK_PATTERN), "zh")
         .when(
@@ -126,17 +132,12 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring for training-data filtering: length gate ×
     (capped length factor × vocabulary diversity).  Exact int ratios →
-    deterministic doubles."""
+    deterministic doubles; a document without tokens scores NULL."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    n_words = F.size(toks)
-    n_uniq = F.size(F.array_distinct(toks))
-    return t.documents.select(
+    return t.documents.selectExpr(
         "doc_id",
-        F.length("text").between(100, 5000).alias("len_ok"),
-        F.round(
-            F.least(n_words / 50.0, F.lit(1.0)) * (n_uniq * 1.0 / n_words), 6
-        ).alias("quality"),
+        "length(text) BETWEEN 100 AND 5000 AS len_ok",
+        f"{spark_sql_quality_score('text')} AS quality",
     )
 
 
@@ -158,7 +159,7 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     return t.documents.select(
         "doc_id",
-        F.size(tokens(F.col("text"))).cast("long").alias("ws_tokens"),
+        F.expr(f"cast(size({_TOKS}) AS bigint)").alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(
                 F.col("text"),
@@ -186,11 +187,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived (functions/text.py); grouping equal fingerprints is the
     O(n) exact-sequence-dup detector."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    return t.documents.select(
+    return t.documents.selectExpr(
         "doc_id",
-        fingerprint(toks).alias("fp"),
-        F.size(toks).cast("long").alias("n_tokens"),
+        f"{spark_sql_fingerprint(_TOKS)} AS fp",
+        f"cast(size({_TOKS}) AS bigint) AS n_tokens",
     )
 
 
@@ -234,21 +234,14 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    toks = tokens(F.col("text"))
-    n_words = F.size(toks)
-    n_uniq = F.size(F.array_distinct(toks))
     scored = (
         t.documents.join(canonical, "doc_id", "left_semi")
         .filter(F.length("text").between(100, 5000))
-        .select(
+        .selectExpr(
             "lang",
             "source",
-            F.round(
-                F.least(n_words / 50.0, F.lit(1.0))
-                * (n_uniq * 1.0 / n_words),
-                6,
-            ).alias("quality"),
-            F.size(toks).cast("long").alias("ws_tokens"),
+            f"{spark_sql_quality_score('text')} AS quality",
+            f"cast(size({_TOKS}) AS bigint) AS ws_tokens",
         )
     )
     return (
@@ -333,7 +326,7 @@ def text_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = Tables(spark, sf_dir)
     tok = t.documents.select(
-        "lang", "doc_id", F.explode(tokens(F.col("text"))).alias("term")
+        "lang", "doc_id", F.expr(f"explode({_TOKS}) AS term")
     )
     stats = tok.groupBy("lang", "term").agg(
         F.count(F.lit(1)).alias("tf"),
@@ -394,7 +387,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (a doc's bigrams spread across partitions before the tiny
     per-doc max)."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
+    toks = F.expr(_TOKS)
     n_grams = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(toks, 1, n_grams),
@@ -496,12 +489,11 @@ def text_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected."""
     from pyspark.sql import Window as W
 
-    from ..dedup.operators import word_shingles
+    from ..dedup.operators import shingle_sets
 
     t = Tables(spark, sf_dir)
-    ex = t.documents.select(
-        "doc_id",
-        F.explode(word_shingles(F.col("text"), 3)).alias("gram"),
+    ex = shingle_sets(t.documents, 3).selectExpr(
+        "doc_id", "explode(shingles) AS gram"
     )
     marked = ex.select(
         "doc_id",
@@ -559,11 +551,11 @@ def text_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     set collapses to DISTINCT before the join (eval sets are ~1000×
     smaller than training corpora — broadcastable), then one aggregate
     on doc_id.  Corpus text is hashed once; nothing quadratic."""
-    from ..dedup.operators import word_shingles
+    from ..dedup.operators import shingle_sets
 
     t = Tables(spark, sf_dir)
-    g = t.documents.select(
-        "doc_id", word_shingles(F.col("text"), _DECON_N).alias("grams")
+    g = shingle_sets(t.documents, _DECON_N).withColumnRenamed(
+        "shingles", "grams"
     )
     ev = (
         g.filter(F.col("doc_id") % _EVAL_MOD == 0)
@@ -634,12 +626,10 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency is one count shuffle; the boilerplate set (frequency-
     filtered) re-joins the exploded grams.  All linear in corpus gram
     volume — the C4 pipeline shape."""
-    from ..dedup.operators import word_shingles
+    from ..dedup.operators import shingle_sets
 
     t = Tables(spark, sf_dir)
-    g = t.documents.select(
-        "doc_id", word_shingles(F.col("text")).alias("grams")
-    )
+    g = shingle_sets(t.documents).withColumnRenamed("shingles", "grams")
     ex = g.select("doc_id", F.explode("grams").alias("gram"))
     boiler = (
         ex.groupBy("gram")
@@ -821,13 +811,9 @@ def text_term_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this plan produces the identical cells from their per-term
     partial sums (10× corpus measured 19.1 s → 1.6 s after this
     rewrite, SCALING.md)."""
-    from ..functions.text import token_hash
-
     t = Tables(spark, sf_dir)
     tc = (
-        t.documents.select(
-            F.explode(tokens(F.col("text"))).alias("term")
-        )
+        t.documents.selectExpr(f"explode({_TOKS}) AS term")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -839,10 +825,10 @@ def text_term_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d"),
     ).withColumn(
         "bucket",
-        token_hash(
-            F.concat(F.col("d").cast("string"), F.lit(":"), F.col("term"))
-        )
-        % _CM_WIDTH,
+        F.expr(
+            spark_sql_token_hash("concat(cast(d AS string), ':', term)")
+            + f" % {_CM_WIDTH}"
+        ),
     )
     sketch = rows.groupBy("d", "bucket").agg(
         F.sum("cnt").alias("cell_n")
@@ -948,10 +934,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     array whose size() is -1, corrupting avgdl and breaking the
     pinned equality on the first degenerate crawl doc)."""
     t = Tables(spark, sf_dir)
-    d = t.documents.select(
-        "doc_id",
-        tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
-    )
+    toks = spark_sql_tokens("coalesce(text, '')")
+    d = t.documents.selectExpr("doc_id", f"{toks} AS toks")
     # bm25_topk reads dl twice (corpus stats + weights join) and tf
     # twice (df + weights); un-materialized, each branch re-runs the
     # tokenize — four full passes per query (round 11, guide §5).
@@ -1123,8 +1107,8 @@ def text_span_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = spans.groupBy("doc_id").agg(
         F.sum("n_tokens").alias("dup_tokens")
     )
-    docs = t.documents.select(
-        "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tokens")
+    docs = t.documents.selectExpr(
+        "doc_id", f"cast(size({_TOKS}) AS bigint) AS n_tokens"
     )
     dup_tokens = F.coalesce("dup_tokens", F.lit(0))
     return docs.join(per_doc, "doc_id", "left").select(
@@ -1216,8 +1200,7 @@ def text_span_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing) pass through verbatim; a fully-duplicated doc cleans to
     the empty string, i.e. span dedup subsumes exact-doc dedup."""
     t = Tables(spark, sf_dir)
-    toks = tokens(F.col("text"))
-    d = t.documents.select("doc_id", toks.alias("W"))
+    d = t.documents.selectExpr("doc_id", f"{_TOKS} AS W")
     wins = window_hashes(t.documents)
     own = (
         wins.groupBy("h")

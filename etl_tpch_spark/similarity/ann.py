@@ -26,22 +26,16 @@ from pyspark.sql import types as T
 
 from ..exprs import sql_double, sql_ident, values_frame
 from ..dedup.hashing import (
-    _as_double_array,
-    cosine_fold,
-    dot_fold,
-    hyperplane_signature,
     hyperplane_signature_udf,
     spark_sql_as_double_array,
     spark_sql_dot_fold,
 )
 
 
-
-
 def _with_norm(df: DataFrame, id_alias: str, emb_alias: str, norm_alias: str):
     """Project (id, double-cast embedding, self-dot norm) — per-vector
     work hoisted out of per-pair scoring; cosine then costs one fold per
-    pair (dot / sqrt(na·nb)), value-identical to cosine_fold.  Built
+    pair (dot / sqrt(na·nb)), value-identical to sql_cosine_fold.  Built
     via selectExpr: one parser round-trip per projection instead of
     per-node py4j construction (round 11, guide §4)."""
     return df.selectExpr(
@@ -99,33 +93,17 @@ def cosine_pairs_threshold(
     fold instead of three.  Values are identical to the naive form
     (cosine = dot/sqrt(na·nb); the per-vector folds are the same math),
     so the oracle is unchanged."""
-    prepped = embeddings.select(
-        "vec_id",
-        _as_double_array(F.col("embedding")).alias("demb"),
-    ).withColumn("norm2", dot_fold(F.col("demb"), F.col("demb")))
-    a = prepped.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("demb").alias("emb_a"),
-        F.col("norm2").alias("na"),
-    )
-    b = prepped.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("demb").alias("emb_b"),
-        F.col("norm2").alias("nb"),
-    )
+    a = _with_norm(embeddings, "vec_a", "emb_a", "na")
+    b = _with_norm(embeddings, "vec_b", "emb_b", "nb")
     return (
         a.crossJoin(b)
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot_fold(F.col("emb_a"), F.col("emb_b"))
-                / F.sqrt(F.col("na") * F.col("nb")),
-                6,
-            ),
+        .filter("vec_a < vec_b")
+        .selectExpr(
+            "vec_a",
+            "vec_b",
+            f"{_pair_cosine_sql('emb_a', 'emb_b', 'na', 'nb')} AS cosine",
         )
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
+        .filter(f"cosine >= {sql_double(threshold)}")
     )
 
 
@@ -611,22 +589,13 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     engines, floor is identical everywhere, so the quantized vectors
     (and everything derived) stay oracle-checkable.  Output: (vec_id,
     qv array<long>, qn = exact integer self-dot)."""
-    demb = _as_double_array(F.col("embedding"))
-    maxabs = F.array_max(F.transform(demb, F.abs))
-    qv = F.transform(
-        demb,
-        lambda x: F.floor(x * (F.lit(127.0) / maxabs) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-    return embeddings.select(
-        "vec_id", qv.alias("qv")
-    ).withColumn(
-        "qn",
-        F.aggregate(
-            F.col("qv"), F.lit(0).cast("long"), lambda acc, x: acc + x * x
-        ),
-    )
+    return embeddings.selectExpr(
+        "vec_id", f"{spark_sql_as_double_array('embedding')} AS demb"
+    ).selectExpr(
+        "vec_id",
+        "transform(demb, x -> cast(floor(x * (127.0D / "
+        "array_max(transform(demb, y -> abs(y)))) + 0.5D) AS bigint)) AS qv",
+    ).selectExpr("*", "aggregate(qv, 0L, (acc, x) -> acc + x * x) AS qn")
 
 
 def quantized_cosine_pairs(
@@ -898,33 +867,32 @@ def cosine_topk_matryoshka(
     coarse pass rides any candidate generator).  Both stages are
     deterministic fold arithmetic, so the whole cascade is
     oracle-checkable bit-for-bit."""
-    corpus = embeddings.select(
-        "vec_id", _as_double_array(F.col("embedding")).alias("c_emb")
-    ).withColumn("c_coarse", F.slice("c_emb", 1, coarse_dims))
-    corpus = corpus.withColumn(
-        "c_norm", dot_fold(F.col("c_emb"), F.col("c_emb"))
-    ).withColumn(
-        "cc_norm", dot_fold(F.col("c_coarse"), F.col("c_coarse"))
+
+    def with_coarse(df: DataFrame, emb: str, coarse: str, norm: str):
+        return df.selectExpr(
+            "*", f"slice({emb}, 1, {coarse_dims}) AS {coarse}"
+        ).selectExpr("*", f"{spark_sql_dot_fold(coarse, coarse)} AS {norm}")
+
+    corpus = with_coarse(
+        _with_norm(embeddings, "vec_id", "c_emb", "c_norm"),
+        "c_emb", "c_coarse", "cc_norm",
     )
-    q = (
-        embeddings.filter(F.col("vec_id").isin(query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            _as_double_array(F.col("embedding")).alias("q_emb"),
-        )
-        .withColumn("q_coarse", F.slice("q_emb", 1, coarse_dims))
-        .withColumn("q_norm", dot_fold(F.col("q_emb"), F.col("q_emb")))
-        .withColumn(
-            "qc_norm", dot_fold(F.col("q_coarse"), F.col("q_coarse"))
-        )
+    q = with_coarse(
+        _with_norm(
+            embeddings.filter(F.col("vec_id").isin(query_ids)),
+            "query_id", "q_emb", "q_norm",
+        ),
+        "q_emb", "q_coarse", "qc_norm",
     )
     j = F.broadcast(q).crossJoin(corpus).filter(
         F.col("query_id") != F.col("vec_id")
     )
     coarse = j.withColumn(
         "ccos",
-        dot_fold(F.col("q_coarse"), F.col("c_coarse"))
-        / F.sqrt(F.col("qc_norm") * F.col("cc_norm")),
+        F.expr(
+            f"{spark_sql_dot_fold('q_coarse', 'c_coarse')}"
+            " / sqrt(qc_norm * cc_norm)"
+        ),
     )
     wc = W.partitionBy("query_id").orderBy(
         F.col("ccos").desc(), F.col("vec_id")

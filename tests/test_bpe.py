@@ -176,7 +176,7 @@ def test_encoder_udf_equals_expression_chain(spark, sf_dir):
     the trainer never saw (OOV: start from chars, take what applies)."""
     from pyspark.sql import functions as F
 
-    from etl_tpch_spark.functions.text import tokens
+    from etl_tpch_spark.functions.text import spark_sql_tokens
     from etl_tpch_spark.queries.bpe import (
         _BPE_K,
         apply_merges_chain,
@@ -190,7 +190,7 @@ def test_encoder_udf_equals_expression_chain(spark, sf_dir):
     merges = train_bpe(train_docs, _BPE_K)
     held = (
         t.documents.filter(F.col("doc_id") % 2 == 1)
-        .select(F.explode(tokens(F.col("text"))).alias("word"))
+        .selectExpr(f"explode({spark_sql_tokens('text')}) AS word")
         .distinct()
     )
     chars = F.expr(

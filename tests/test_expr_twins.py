@@ -1,16 +1,21 @@
-"""Round-11 optimization guards: the parser-built (selectExpr/expr
-string) twins introduced to cut driver py4j round-trips must stay
-value-identical to the node-built Column forms they replaced, and the
-from_json literal-array carrier must both fold to a constant and
-carry exact values.
+"""Guards for the Spark-SQL text kernels (selectExpr/expr strings):
+each hashing/folding kernel matches a few lines of plain Python on the
+fixtures, the remaining parser forms stay value-identical to the
+node-built Column forms they replaced, the from_json literal-array
+carrier both folds to a constant and carries exact values, and no
+kernel is built two ways.
 
-These are the engine-side equivalence pins for the round-11
-construction diet (OPTIMIZATION_r11.md): the oracle diff already
-hash-checks every registered query end-to-end; these tests localize a
-future drift to the specific twin that caused it.
+The oracle diff already hash-checks every registered query end to
+end; these tests localize a future drift to the specific kernel that
+caused it.
 """
 
 from __future__ import annotations
+
+import hashlib
+import math
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,98 +70,89 @@ def docs(spark, sf_dir):
     return Tables(spark, sf_dir).documents.select("doc_id", "text")
 
 
-def test_minhash_pipeline_twin_equals_column_form(spark, docs):
+def _md5_hash32(s: str) -> int:
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
+
+
+def test_minhash_pipeline_matches_python_reference(spark, docs):
     """tokens → shingles → shingle hashes → minhash signature → band
-    keys: the selectExpr pipeline (dedup/operators.py
-    _banded_signatures) must equal the original Column builders
-    row-for-row."""
+    keys, as the MinHash-LSH operators build them
+    (_banded_signatures), against plain Python: md5[:8] token hashes,
+    affine permutations folded with an element-wise min, and
+    ``"band,a,b"`` keys."""
     from etl_tpch_spark.dedup.hashing import (
-        band_keys,
-        minhash_signature,
-        shingle_hashes,
-        spark_sql_band_keys,
-        spark_sql_minhash_signature,
-        spark_sql_shingle_hashes,
+        MINHASH_PERMS,
+        N_BANDS,
+        ROWS_PER_BAND,
     )
-    from etl_tpch_spark.dedup.operators import (
-        NGRAM,
-        spark_sql_word_shingles_from_tokens,
-        word_shingles_from_tokens,
-    )
-    from etl_tpch_spark.functions.text import spark_sql_tokens, tokens
+    from etl_tpch_spark.dedup.operators import NGRAM, _banded_signatures
+    from etl_tpch_spark.functions.text import HASH_MOD
 
-    old = (
-        docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
-        .filter(F.size("_toks") >= NGRAM)
-        .select(
-            "doc_id",
-            word_shingles_from_tokens(F.col("_toks")).alias("sh"),
-        )
-        .select(
-            "doc_id",
-            "sh",
-            band_keys(
-                minhash_signature(shingle_hashes(F.col("sh")))
-            ).alias("bands"),
-        )
-    )
-    new = (
-        docs.selectExpr("doc_id", f"{spark_sql_tokens('text')} AS _toks")
-        .filter(f"size(_toks) >= {NGRAM}")
-        .selectExpr(
-            "doc_id",
-            f"{spark_sql_word_shingles_from_tokens('_toks')} AS sh",
-        )
-        .selectExpr(
-            "doc_id",
-            "sh",
-            f"{spark_sql_band_keys(spark_sql_minhash_signature(spark_sql_shingle_hashes('sh')))}"
-            " AS bands",
-        )
-    )
-    a = {r["doc_id"]: (list(r["sh"]), list(r["bands"])) for r in old.collect()}
-    b = {r["doc_id"]: (list(r["sh"]), list(r["bands"])) for r in new.collect()}
-    assert a == b
+    def shingles(text):
+        toks = [x for x in text.split(" ") if x != ""]
+        grams = [
+            " ".join(toks[i : i + NGRAM])
+            for i in range(len(toks) - NGRAM + 1)
+        ]
+        return list(dict.fromkeys(grams))  # distinct, first-seen order
+
+    def bands(sh):
+        hs = [_md5_hash32(g) for g in sh]
+        sig = [
+            min([HASH_MOD] + [(a * h + b) % HASH_MOD for h in hs])
+            for a, b in MINHASH_PERMS
+        ]
+        return [
+            ",".join(
+                [str(band)]
+                + [
+                    str(sig[band * ROWS_PER_BAND + r])
+                    for r in range(ROWS_PER_BAND)
+                ]
+            )
+            for band in range(N_BANDS)
+        ]
+
+    want = {}
+    for r in docs.collect():
+        sh = shingles(r["text"])
+        if sh:  # < NGRAM tokens: no shingles, no signature row
+            want[r["doc_id"]] = (sh, bands(sh))
+    got = {
+        r["doc_id"]: (list(r["shingles"]), list(r["bands"]))
+        for r in _banded_signatures(docs, storage_level=None).collect()
+    }
+    assert len(want) > 0
+    assert got == want
 
 
-def test_simhash_band_explode_sql_twin(spark):
-    """simhash_band_explode_sql (third-session conversion) must emit
-    the same (band_idx, band_val) rows as the F.struct wrapping of
-    simhash_band_cols it replaced — per signature, per band."""
+def test_simhash_band_explode_matches_python_reference(spark):
+    """simhash_band_explode_sql emits one (band_idx, band_val) row per
+    band: max_hamming + 1 contiguous bands of the signature, the first
+    ``bits % n_bands`` one bit wider, each ``(h >> offset) & mask``."""
     from etl_tpch_spark.dedup.operators import (
         SIMHASH_BITS,
-        simhash_band_cols,
         simhash_band_explode_sql,
     )
 
     sigs = spark.range(200).selectExpr(
         "xxhash64(id) & 1152921504606846975 AS h"  # 60-bit positive
     )
+    hs = [r["h"] for r in sigs.collect()]
     for max_hamming in (1, 3):
-        old = sigs.select(
-            "h",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band_idx"),
-                            c.alias("band_val"),
-                        )
-                        for i, c in enumerate(
-                            simhash_band_cols(
-                                F.col("h"), max_hamming, SIMHASH_BITS
-                            )
-                        )
-                    ]
-                )
-            ).alias("band"),
-        ).select("h", "band.band_idx", "band.band_val")
-        new = sigs.selectExpr(
+        n_bands = max_hamming + 1
+        base, extra = divmod(SIMHASH_BITS, n_bands)
+        want = []
+        for h in hs:
+            offset = 0
+            for i in range(n_bands):
+                width = base + (1 if i < extra else 0)
+                want.append((h, i, (h >> offset) & ((1 << width) - 1)))
+                offset += width
+        got = sigs.selectExpr(
             "h", simhash_band_explode_sql("h", max_hamming, SIMHASH_BITS)
         ).selectExpr("h", "band.band_idx", "band.band_val")
-        assert sorted(map(tuple, old.collect())) == sorted(
-            map(tuple, new.collect())
-        )
+        assert sorted(map(tuple, got.collect())) == sorted(want)
 
 
 def test_block_explode_sql_twin(spark):
@@ -231,39 +227,57 @@ def test_media_meta_sql_twin(spark, sf_dir):
         assert a == b
 
 
-def test_dot_fold_and_quantize_twins(spark, sf_dir):
-    """spark_sql_dot_fold / SPARK_SQL_QUANTIZE vs the Column forms on
-    the embeddings fixture (sequential fold ⇒ order-sensitive, so
-    equality is bitwise, not approximate)."""
+def test_dot_fold_and_quantize_match_python_reference(spark, sf_dir):
+    """spark_sql_dot_fold / SPARK_SQL_QUANTIZE on the embeddings
+    fixture against plain Python: a sequential left fold of double
+    products starting at 0.0 (order-sensitive, so equality is bitwise,
+    not approximate), and floor((x + 1) * 1e6 + 0.5) per element."""
     from etl_tpch_spark.catalog import Tables
     from etl_tpch_spark.dedup.hashing import (
-        _as_double_array,
-        dot_fold,
         spark_sql_as_double_array,
         spark_sql_dot_fold,
     )
     from etl_tpch_spark.similarity.kmeans import SPARK_SQL_QUANTIZE
 
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x * x
+        return acc
+
     emb = Tables(spark, sf_dir).embeddings
-    old = emb.select(
-        "vec_id",
-        dot_fold(
-            _as_double_array(F.col("embedding")),
-            _as_double_array(F.col("embedding")),
-        ).alias("n"),
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(
-                (x.cast("double") + F.lit(1.0)) * 1_000_000 + F.lit(0.5)
-            ).cast("long"),
-        ).alias("qv"),
-    )
     d = spark_sql_as_double_array("embedding")
-    new = emb.selectExpr(
+    rows = emb.selectExpr(
         "vec_id",
+        "embedding",
         f"{spark_sql_dot_fold(d, d)} AS n",
         f"{SPARK_SQL_QUANTIZE} AS qv",
-    )
-    a = {r["vec_id"]: (r["n"], list(r["qv"])) for r in old.collect()}
-    b = {r["vec_id"]: (r["n"], list(r["qv"])) for r in new.collect()}
-    assert a == b
+    ).collect()
+    assert len(rows) > 0
+    for r in rows:
+        xs = list(r["embedding"])
+        assert r["n"] == fold(xs)
+        assert list(r["qv"]) == [
+            math.floor((x + 1.0) * 1_000_000 + 0.5) for x in xs
+        ]
+
+
+def test_one_spark_form_per_kernel():
+    """A kernel is built one way: no engine module defines both ``X``
+    and its Spark-SQL text form ``spark_sql_X``, and the kernel
+    modules do not import ``Column``."""
+    import etl_tpch_spark
+
+    root = pathlib.Path(etl_tpch_spark.__file__).parent
+    both = []
+    for p in sorted(root.rglob("*.py")):
+        defs = set(re.findall(r"^def (\w+)\(", p.read_text(), re.M))
+        both += [
+            f"{p.relative_to(root)}:{name}"
+            for name in sorted(defs)
+            if f"spark_sql_{name}" in defs
+        ]
+    assert both == []
+    for rel in ("functions/text.py", "dedup/hashing.py"):
+        src = (root / rel).read_text()
+        assert not re.search(r"^\s*(from|import) .*\bColumn\b", src, re.M), rel

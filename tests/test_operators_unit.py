@@ -16,8 +16,8 @@ from etl_tpch_spark.dedup.operators import (
     exact_duplicates,
     jaccard_pairs_brute,
     minhash_lsh_pairs,
+    shingle_sets,
     simhash_pairs,
-    word_shingles,
 )
 from etl_tpch_spark.functions.agg import rev_dec
 from etl_tpch_spark.operators.joins import asof_join, range_join
@@ -209,7 +209,7 @@ def test_simhash_near_pair(docs):
 
 def test_word_shingles_short_text(spark):
     df = spark.createDataFrame([(1, "one two")], "doc_id long, text string")
-    out = df.select(word_shingles(F.col("text"), 3).alias("sh")).first()
+    out = shingle_sets(df, 3).selectExpr("shingles AS sh").first()
     assert out.sh == []  # shorter than n → empty set, not error
 
 
@@ -259,13 +259,15 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_text_function_edges(spark):
-    """tokens/stopword_count/fingerprint on edge inputs: empty string,
-    repeated whitespace, unicode — no crashes, sensible values."""
+    """tokens/stopword_count/fingerprint/quality on edge inputs: empty
+    string, repeated whitespace, unicode — no crashes, sensible values;
+    a document without tokens has a NULL quality score."""
     from etl_tpch_spark.functions.text import (
         STOPWORDS,
-        fingerprint,
-        stopword_count,
-        tokens,
+        spark_sql_fingerprint,
+        spark_sql_quality_score,
+        spark_sql_stopword_count,
+        spark_sql_tokens,
     )
 
     df = spark.createDataFrame(
@@ -277,14 +279,15 @@ def test_text_function_edges(spark):
         ],
         "id long, text string",
     )
-    toks = tokens(F.col("text"))
+    toks = spark_sql_tokens("text")
     out = {
-        r.id: (r.n, r.sw, r.fp)
-        for r in df.select(
+        r.id: (r.n, r.sw, r.fp, r.q)
+        for r in df.selectExpr(
             "id",
-            F.size(toks).alias("n"),
-            stopword_count(toks, STOPWORDS["en"]).alias("sw"),
-            fingerprint(toks).alias("fp"),
+            f"size({toks}) AS n",
+            f"{spark_sql_stopword_count(toks, STOPWORDS['en'])} AS sw",
+            f"{spark_sql_fingerprint(toks)} AS fp",
+            f"{spark_sql_quality_score('text')} AS q",
         ).collect()
     }
     assert out[1][0] == 0 and out[2][0] == 0  # empty/space → no tokens
@@ -292,6 +295,9 @@ def test_text_function_edges(spark):
     assert out[3][1] == 4  # case-sensitive hits: the, the, of, and (THE excluded)
     assert out[4][0] == 6  # unicode tokens intact
     assert isinstance(out[1][2], int)  # fingerprint total on empty
+    assert out[1][3] is None and out[2][3] is None  # no tokens → NULL
+    assert out[3][3] == 0.08  # min(5/50, 1) × 4 distinct / 5
+    assert out[4][3] == 0.12  # min(6/50, 1) × 6 distinct / 6
 
 
 def test_cjk_detection(spark):

@@ -29,7 +29,7 @@ def _daily_registers(spark, sf_dir):
         F.date_trunc("day", F.col("ts")).alias("day"),
         F.col("user_id").cast("string").alias("k"),
     )
-    return _hll_spark(rows, F.col("k"), _M_DAILY, _RANK_MAX_DAILY)
+    return _hll_spark(rows, _M_DAILY, _RANK_MAX_DAILY)
 
 
 def test_hll_sketch_merge_is_exact(spark, sf_dir):
